@@ -174,6 +174,26 @@ object Bench {
   private[graft] def sfBase(dir: String): String =
     dir.stripSuffix("/").split('/').last
 
+  /** The gate retry v2 applies to the committed reference: its medians when
+    * it is comparable — same cpus AND same sf AND its own median calib at
+    * the clean floor (an elevated reference would anchor retry v2 to a
+    * contaminated level, VERDICT r21 #3) — else the reason it was rejected.
+    * The outcome ships in the artifact as "ref_gate", so a rejected
+    * reference is not only a stderr note.
+    */
+  private[graft] def refGate(
+      ref: Option[String], cpus: Option[Int], sfDir: String, calibMax: Double)
+      : Either[String, Map[String, Double]] =
+    ref.toRight("missing").flatMap(parseRef(_).toRight("unparseable")).flatMap {
+      case (refCpus, _, _, _) if refCpus.isEmpty || refCpus != cpus =>
+        Left(s"cpus ${refCpus.getOrElse("?")} != ${cpus.getOrElse("?")}")
+      case (_, refSf, _, _) if sfBase(refSf) != sfBase(sfDir) =>
+        Left(s"sf ${sfBase(refSf)} != ${sfBase(sfDir)}")
+      case (_, _, _, calibMed) if !calibMed.exists(_ <= calibMax) =>
+        Left(s"calib ${calibMed.map(d3).getOrElse("?")} > ${d3(calibMax)}")
+      case (_, _, qs, _) => Right(qs)
+    }
+
   /** Merge policy for the retry pass: retry reps refine TIMING only (a
     * query only reaches retry with a FULLY CLEAN first set), so errored
     * retry reps are discarded — a functioning query must never flip to
@@ -267,7 +287,8 @@ object Bench {
       refCapped: Seq[String] = Nil,
       cpus: Option[Int] = None,
       storageMb: Seq[Long] = Nil,
-      calibPar: Seq[Double] = Nil): String = {
+      calibPar: Seq[Double] = Nil,
+      refGateStatus: Option[String] = None): String = {
     val qs = results.map { case (name, raws) =>
       val v =
         if (raws.exists(_.isLeft)) "\"err\""
@@ -315,6 +336,9 @@ object Bench {
     // future run's ref comparison joins on.
     val refFlaggedJson = refFlaggedQs.map(jsonStr).mkString("[", ",", "]")
     val refCappedJson = refCapped.map(jsonStr).mkString("[", ",", "]")
+    // "ref_gate": "ok" or "rejected:<reason>" ([[refGate]]) — tells a run
+    // with no comparable reference from one whose reference was rejected.
+    val refGateJson = refGateStatus.map(g => ""","ref_gate":""" + jsonStr(g)).getOrElse("")
     val cpusJson = cpus.map(c => s""","cpus":$c""").getOrElse("")
     // "storage_mb": executor-resident block bytes (MB) sampled at the same
     // positions as cpu_calib_sec — the flat-storage-profile evidence that
@@ -330,7 +354,7 @@ object Bench {
     val calibParJson =
       if (calibPar.isEmpty) ""
       else calibPar.map(d3).mkString(""","calib_par_sec":[""", ",", "]")
-    s"""{"metric":"total","value":${d3(total)},"unit":"sec","queries":$qs,"raws":$rawsJson,"errors":$errs,"errored":$nErr,"sf":${jsonStr(sfDir)},"reps":$reps$cpusJson,"retried":$retriedJson,"ref_flagged":$refFlaggedJson,"ref_capped":$refCappedJson,"retry_calib":$retryCalibJson,"cpu_calib_sec":$calibJson,"calib_at":$calibAtJson$storageJson$calibParJson}"""
+    s"""{"metric":"total","value":${d3(total)},"unit":"sec","queries":$qs,"raws":$rawsJson,"errors":$errs,"errored":$nErr,"sf":${jsonStr(sfDir)},"reps":$reps$cpusJson,"retried":$retriedJson,"ref_flagged":$refFlaggedJson,"ref_capped":$refCappedJson$refGateJson,"retry_calib":$retryCalibJson,"cpu_calib_sec":$calibJson,"calib_at":$calibAtJson$storageJson$calibParJson}"""
   }
 
   /** One short line the driver can always parse even when the full artifact
@@ -489,32 +513,19 @@ object Bench {
     // come from the v1-MERGED medians so a v1-corrected query is not
     // retried twice; the worst [[RefRetryMax]] by absolute excess run,
     // the rest ship in "ref_capped".
-    val refPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_REF", "bench_ref.json")
     val refCalibMax = sys.env.get("SPARK_GRAFT_BENCH_REF_CALIB_MAX")
       .map(_.toDouble).getOrElse(RefCalibMaxDefault)
-    val refMedians: Map[String, Double] = {
-      val p = java.nio.file.Paths.get(refPath)
-      if (!java.nio.file.Files.exists(p)) Map.empty
-      else parseRef(new String(java.nio.file.Files.readAllBytes(p),
-        java.nio.charset.StandardCharsets.UTF_8)) match {
-        // Comparable ⟺ same cpus AND same sf AND the reference's own
-        // median calib sits at the clean floor — an elevated reference
-        // would anchor retry v2 to a contaminated level (VERDICT r21 #3).
-        case Some((Some(refCpus), refSf, qs, calibMed))
-            if scala.util.Try(cpus.toInt).toOption.contains(refCpus) &&
-              sfBase(refSf) == sfBase(sfDir) &&
-              calibMed.exists(_ <= refCalibMax) =>
-          System.err.println(s"[bench] ref $refPath: ${qs.size} medians " +
-            s"(cpus=$refCpus, calib_med=${calibMed.map(d3).getOrElse("?")})")
-          qs
-        case other =>
-          System.err.println(s"[bench] ref $refPath not comparable " +
-            s"(cpus/sf/calib<=${d3(refCalibMax)} gate): " +
-            other.map { case (c, sf, qs, cm) =>
-              s"cpus=$c sf=$sf n=${qs.size} calib_med=${cm.map(d3)}" }.toString)
-          Map.empty
-      }
+    val refPath = java.nio.file.Paths.get(
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_REF", "bench_ref.json"))
+    val gate = refGate(
+      Some(refPath).filter(java.nio.file.Files.exists(_)).map(p =>
+        new String(java.nio.file.Files.readAllBytes(p), java.nio.charset.StandardCharsets.UTF_8)),
+      scala.util.Try(cpus.toInt).toOption, sfDir, refCalibMax)
+    gate match {
+      case Right(qs) => System.err.println(s"[bench] ref $refPath: ${qs.size} medians")
+      case Left(why) => System.err.println(s"[bench] ref $refPath not comparable: $why")
     }
+    val refMedians = gate.getOrElse(Map.empty[String, Double])
     val v2All = mergedResults.collect {
       case (name, raws)
           if raws.forall(_.isRight) && !retried.contains(name) &&
@@ -532,7 +543,8 @@ object Bench {
     val calibPar = Seq(calibParStart, calibParEnd)
     val full = renderJson(mergedResults2, sfDir, reps, calib.toSeq, retried,
       retryCalib.toSeq, refFlaggedQs, v2Capped,
-      scala.util.Try(cpus.toInt).toOption, storage.toSeq, calibPar)
+      scala.util.Try(cpus.toInt).toOption, storage.toSeq, calibPar,
+      Some(gate.fold(why => s"rejected:$why", _ => "ok")))
     println(full)
     // The full line above routinely exceeds the driver's capture window
     // (BENCH_r05..r07 all came back tail-truncated, "parsed": null). Two
@@ -550,8 +562,8 @@ object Bench {
       (full + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     if (only.isDefined) write("bench_subset.json")
     else {
-      write(s"bench_out_c$cpus.json")
-      if (cpus == "32") write("bench_out.json")
+      write(s"bench_out_c$nCpus.json")
+      if (nCpus == 32) write("bench_out.json")
     }
     println(renderCompact(mergedResults2, calib.toSeq, retried, refFlaggedQs,
       scala.util.Try(cpus.toInt).toOption, calibPar))

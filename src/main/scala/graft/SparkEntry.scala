@@ -23,7 +23,7 @@ object SparkEntry {
   private val Day = 24 * Hour
 
   private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    Tsdb.table(s, dir, name)
 
   private def ev(s: SparkSession, dir: String): UtsSeries = Tsdb.events(s, dir)
 
@@ -46,8 +46,6 @@ object SparkEntry {
   }
 
   private val nowCache = scala.collection.concurrent.TrieMap.empty[String, Long]
-  private val schemaCache =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.types.StructType]
   private def nowOf(series: UtsSeries, dir: String): Long =
     nowCache.getOrElseUpdate(dir, series.df.agg(max(col("time"))).head().getLong(0))
 
@@ -4170,12 +4168,9 @@ object SparkEntry {
     */
   private def streamTumblingDaily(s: SparkSession, dir: String): DataFrame = {
     // readStream must be given the PHYSICAL file schema (it cannot infer,
-    // and the corpus `ts` type varies by generation — Tsdb.normalizeTs);
-    // cached per dir (immutable corpus) since inferring costs a footer-read
-    // job per call. The legacy-nanos conf must be set on THIS session even
-    // on a cache hit (eventsPhysicalSchema sets it only when it runs).
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = schemaCache.getOrElseUpdate(dir, graft.uts.Tsdb.eventsPhysicalSchema(s, dir))
+    // and the corpus `ts` type varies by generation — Tsdb.normalizeTs).
+    // Reading it starts no job and sets the legacy-nanos conf on `s`.
+    val schema = graft.uts.Tsdb.eventsPhysicalSchema(s, dir)
     // The file source ingests DIRECTORIES (its discovery unit — the natural
     // shape for a landing zone at scale); the corpus ships single files, so
     // the gate bridges with a temp-dir symlink.
@@ -4222,8 +4217,7 @@ object SparkEntry {
     * state-partition count never touch the shared session.
     */
   private def streamSlidingDaily(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = schemaCache.getOrElseUpdate(dir, graft.uts.Tsdb.eventsPhysicalSchema(s, dir))
+    val schema = graft.uts.Tsdb.eventsPhysicalSchema(s, dir)
     val streamDir = {
       val d = java.nio.file.Paths.get(
         System.getProperty("java.io.tmpdir"), s"graft_stream_src_${pathToken(dir)}")
@@ -5046,8 +5040,7 @@ object SparkEntry {
     * arithmetic exactly.
     */
   private def streamSessionCounts(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = schemaCache.getOrElseUpdate(dir, graft.uts.Tsdb.eventsPhysicalSchema(s, dir))
+    val schema = graft.uts.Tsdb.eventsPhysicalSchema(s, dir)
     val streamDir = {
       val d = java.nio.file.Paths.get(
         System.getProperty("java.io.tmpdir"), s"graft_stream_src_${pathToken(dir)}")

@@ -118,10 +118,7 @@ final class UtsDb(
         .map(d => new org.apache.hadoop.fs.Path(s"$d/$name.parquet"))
         .filter(p =>
           p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-        .map { p =>
-          spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-          spark.read.parquet(p.toString)
-        }
+        .map(p => Tsdb.readParquet(spark, p.toString))
       loaded match {
         // A corpus table that stores `ts` but not the reserved time column
         // gets the same typed boundary as [[Tsdb.events]] — without it the
@@ -191,8 +188,7 @@ object Tsdb {
     * derived ms column never reaches the scan; one on `ts` does.
     */
   def events(spark: SparkSession, dir: String): UtsSeries = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = readParquet(spark, s"$dir/events.parquet")
     UtsSeries(
       raw.withColumn("time", timeExprFor(raw, "ts")),
       timeCol = "time",
@@ -222,26 +218,21 @@ object Tsdb {
   }
 
   /** `events` with `ts` normalized to a raw epoch-nanosecond Long, whatever
-    * the corpus generation wrote physically — see [[normalizeTs]]. The legacy
-    * nanos-as-long conf stays set so a TIMESTAMP(NANOS) corpus (which Spark 4
-    * otherwise rejects with [PARQUET_TYPE_ILLEGAL]) reads as the Long this
-    * engine computes on; DuckDB's `epoch_ms(ts)` truncates identically for
-    * every generation, keeping the oracle comparable.
+    * the corpus generation wrote physically — see [[normalizeTs]] (a
+    * TIMESTAMP(NANOS) corpus already reads as that Long, see [[readParquet]]);
+    * DuckDB's `epoch_ms(ts)` truncates identically for every generation,
+    * keeping the oracle comparable.
     */
-  def eventsRaw(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeTs(spark.read.parquet(s"$dir/events.parquet"))
-  }
+  def eventsRaw(spark: SparkSession, dir: String): DataFrame =
+    normalizeTs(readParquet(spark, s"$dir/events.parquet"))
 
   /** Physical file schema of the events table — what `readStream` (which
     * cannot infer) must be given. Distinct from `eventsRaw(...).schema`,
     * which reflects the POST-normalization Long type.
     */
   def eventsPhysicalSchema(
-      spark: SparkSession, dir: String): org.apache.spark.sql.types.StructType = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$dir/events.parquet").schema
-  }
+      spark: SparkSession, dir: String): org.apache.spark.sql.types.StructType =
+    readParquet(spark, s"$dir/events.parquet").schema
 
   /** Normalize the corpus `ts` column to an epoch-NANOSECOND Long. Corpus
     * generations differ: some write parquet TIMESTAMP(NANOS) (read as an
@@ -273,5 +264,57 @@ object Tsdb {
   }
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    readParquet(spark, s"$dir/$name.parquet")
+
+  /** `spark.read.parquet(path)` without its schema-inference job. Inference
+    * reads one footer inside a one-task Spark job — on a dashboard of small
+    * panels, a job per panel before any query runs. Here the SAME footer is
+    * read on the driver: the file Spark's non-merging inference picks
+    * (`_common_metadata`, else `_metadata`, else the first data file by
+    * path), converted by Spark's own converter under the session conf and
+    * preferring the Spark row metadata a Spark writer stored — exactly
+    * `ParquetFileFormat.readSchemaFromFooter` — so the stored `ts` type rules
+    * stay Spark's. The schema is read on every call and never cached: a
+    * snapshot rewritten in place under the same path is read with its new
+    * schema. A missing or empty path falls through to Spark's own inference,
+    * which fails loud exactly as before.
+    *
+    * The legacy nanos-as-long conf is set here, for every corpus read: a
+    * TIMESTAMP(NANOS) column (which Spark 4 otherwise rejects with
+    * [PARQUET_TYPE_ILLEGAL]) reads as the epoch-ns Long this engine
+    * computes on, at schema conversion and at scan alike.
+    */
+  private[uts] def readParquet(spark: SparkSession, path: String): DataFrame = {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    footerSchema(spark, path)
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+  }
+
+  private def footerSchema(
+      spark: SparkSession, path: String): Option[org.apache.spark.sql.types.StructType] = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+    import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
+    import org.apache.spark.sql.execution.datasources.parquet._
+    val root = new Path(path)
+    val conf = spark.sessionState.newHadoopConf()
+    if (!root.getFileSystem(conf).exists(root)) None
+    else {
+      // The listing the reader itself does (hidden-file and partition rules).
+      val leaves = new InMemoryFileIndex(spark, Seq(root), Map.empty, None)
+        .allFiles().sortBy(_.getPath.toString)
+      val summaries = Seq(
+        ParquetFileWriter.PARQUET_COMMON_METADATA_FILE, ParquetFileWriter.PARQUET_METADATA_FILE)
+      summaries.flatMap(n => leaves.find(_.getPath.getName == n)).headOption
+        .orElse(leaves.find(f => !summaries.contains(f.getPath.getName)))
+        .map { f =>
+          val footer = ParquetFooterReader.readFooter(
+            HadoopInputFile.fromStatus(f, conf), SKIP_ROW_GROUPS)
+          ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
+            new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+        }
+    }
+  }
 }

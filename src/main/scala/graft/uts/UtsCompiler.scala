@@ -66,14 +66,6 @@ private[uts] object RawTime {
 object UtsCompiler {
   private val BucketCol = "__uts_bucket"
 
-  /** Compile + run a [[UtsQuery]] against `df`.
-    *
-    * Output schema: interval grouping emits `bin_start, bin_width` (the
-    * reference's `group: {start, width}`, uts.ts:126-129) followed by one
-    * column per metric, ordered newest-bin-first (uts.ts:132-139 routing +
-    * test.js:143-154 ordering); [[AnyGroup]] emits a single row of metric
-    * columns only (uts.ts:56-58).
-    */
   /** Redundant raw-column predicates for time-column comparisons, so the scan
     * can prune row groups (`time = floor(raw/1ms)`, all values non-negative):
     * time > X ⟺ raw ≥ X+1 ms; time < X ⟺ raw < X ms; time = X ⟺ both.
@@ -101,6 +93,25 @@ object UtsCompiler {
       }
   }
 
+  /** Compile + run a [[UtsQuery]] against `df`.
+    *
+    * Output schema: interval grouping emits `bin_start, bin_width` (the
+    * reference's `group: {start, width}`, uts.ts:126-129) followed by one
+    * column per metric; [[ColumnGroup]] emits the group columns followed by
+    * the metrics; [[AnyGroup]] emits a single row of metric columns only
+    * (uts.ts:56-58).
+    *
+    * Output order: interval bins newest first (`bin_start` descending,
+    * uts.ts:132-139 routing + test.js:143-154 ordering); column groups
+    * ascending by the group columns, NULLs first. The order is produced in
+    * ONE partition, never by a global `orderBy`, whose range-boundary
+    * sampling costs every panel an extra job and an extra shuffle stage.
+    * That is safe at 100 TB because the ordered rows are report-sized
+    * whatever the input: the zero-fill spine has exactly `count` rows — one
+    * per bin, `count` known when the plan is built — and a group result is
+    * what the caller collects. The input scan and the aggregation stay fully
+    * parallel; only the aggregated rows meet in one task.
+    */
   def run(df: DataFrame, q: UtsQuery): DataFrame = {
     require(q.metrics.nonEmpty, "UtsQuery needs at least one metric")
     val ord = OrderCtx(col(q.timeCol), q.seqCol.map(col).getOrElse(lit(0L)))
@@ -115,9 +126,9 @@ object UtsCompiler {
         filtered.groupBy().agg(aggs.head, aggs.tail: _*)
 
       case ColumnGroup(cols) =>
-        filtered.groupBy(cols.map(col): _*)
-          .agg(aggs.head, aggs.tail: _*)
-          .orderBy(cols.map(col): _*)
+        graft.ops.Ordered.smallResult(
+          filtered.groupBy(cols.map(col): _*).agg(aggs.head, aggs.tail: _*),
+          cols: _*)
 
       case IntervalGroup(width, fill, now) =>
         // Q7: points after `now` are dropped (uts.ts:132-136) — as a set-based
@@ -134,8 +145,9 @@ object UtsCompiler {
           .groupBy(BucketCol)
           .agg(aggs.head, aggs.tail: _*)
 
+        // Both arms leave the (report-sized) bins in ONE partition.
         val result =
-          if (!fill) grouped
+          if (!fill) grouped.repartition(1)
           else {
             // Zero-fill (Q9, uts.ts:124-130,141-145): build the bin spine and
             // left-join aggregates onto it. Bin count derives from the
@@ -154,7 +166,7 @@ object UtsCompiler {
                 // 0 (one spurious zero-filled bin) but the reference's
                 // Math.floor yields −1 (empty spine, uts.ts:113-122).
                 val count = math.max(Math.floorDiv(now - b, width) + 1L, 0L)
-                df.sparkSession.range(count).select(col("id").as(BucketCol))
+                df.sparkSession.range(0L, count, 1L, 1).select(col("id").as(BucketCol))
               case None =>
                 inRange
                   .groupBy()
@@ -165,7 +177,9 @@ object UtsCompiler {
                       floor((lit(now) - col("__t0")) / lit(width)).cast("long")))
                     .as(BucketCol))
             }
-            // Post-aggregation side is at most one row per bin — broadcast it.
+            // Post-aggregation side is at most one row per bin — broadcast it
+            // and stream the one-partition spine (a global aggregate when
+            // unbounded) through the join, which keeps its partitioning.
             val joined = spine.join(broadcast(grouped), Seq(BucketCol), "left")
             val fills = q.metrics.map { case (name, m) =>
               m.emptyValue match {
@@ -178,13 +192,14 @@ object UtsCompiler {
             joined.select(col(BucketCol) +: fills: _*)
           }
 
-        // Labels (uts.ts:126-129): start = now − (i+1)·w, width = w;
-        // ascending bucket = newest bin first (test.js:143-154).
+        // Labels (uts.ts:126-129): start = now − (i+1)·w, width = w.
         val labeled = result.select(
           (lit(now) - (col(BucketCol) + 1) * lit(width)).as("bin_start") +:
           lit(width).as("bin_width") +:
           q.metrics.map { case (name, _) => col(name) }: _*)
-        labeled.orderBy(col("bin_start").desc)
+        // Already one partition: the narrow coalesce states it, and the sort
+        // needs no exchange (newest bin first, test.js:143-154).
+        labeled.coalesce(1).sortWithinPartitions(col("bin_start").desc)
     }
   }
 }

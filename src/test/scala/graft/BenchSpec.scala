@@ -145,6 +145,30 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.parseRef("""{"value":1.0}""").isEmpty)
   }
 
+  test("refGate admits a comparable reference and names why it rejects one") {
+    val line = """{"queries":{"a":1.200},"sf":"/root/testdata/sf0.1","reps":3,"cpus":32,"cpu_calib_sec":[0.072,0.070]}"""
+    def gate(ref: Option[String], cpus: Int = 32, sf: String = "testdata/sf0.1") =
+      Bench.refGate(ref, Some(cpus), sf, Bench.RefCalibMaxDefault)
+    assert(gate(Some(line)) == Right(Map("a" -> 1.2)))
+    assert(gate(None) == Left("missing"))
+    assert(gate(Some("""{"value":1.0}""")) == Left("unparseable"))
+    assert(gate(Some(line), cpus = 4) == Left("cpus 32 != 4"))
+    assert(gate(Some(line), sf = "/x/sf0.01") == Left("sf sf0.1 != sf0.01"))
+    assert(gate(Some(line.replace("0.072,0.070", "0.090,0.080"))) == Left("calib 0.085 > 0.075"))
+    // A legacy reference without "cpus" or calib fails closed.
+    assert(gate(Some("""{"queries":{"a":1.0},"sf":"sf0.1"}""")) == Left("cpus ? != 32"))
+  }
+
+  test("renderJson carries the ref_gate status when given") {
+    val res = Seq("a" -> Seq[Either[String, Double]](Right(1.0)))
+    val json = Bench.renderJson(res, "/tmp/sf", 1, Seq((-1, 0.1)), cpus = Some(4),
+      refGateStatus = Some("rejected:cpus 32 != 4"))
+    assert(json.contains("\"ref_gate\":\"rejected:cpus 32 != 4\""))
+    // the gate field never splits the "reps":N,"cpus":M pair parseRef anchors on
+    assert(Bench.parseRef(json).flatMap(_._1).contains(4))
+    assert(!Bench.renderJson(res, "/tmp/sf", 1, Seq((-1, 0.1))).contains("ref_gate"))
+  }
+
   test("d3 formats locale-independently (ADVICE r21)") {
     val prev = java.util.Locale.getDefault
     try {
