@@ -1430,11 +1430,12 @@ object SparkEntry {
 
   /** Persisted-index APPEND lifecycle: the index is built over only the
     * even-id half of the corpus, the odd half arrives later as an ingest
-    * batch ([[graft.ops.Dedup.minhashIndexAppend]] — new files into the
-    * existing (band, bucket) partitions, no rebuild), and a probe batch of
-    * edited re-crawls drawn from BOTH halves (doc_id % 25 = 0 covers even
-    * %50 = 0 and odd %50 = 25 sources) runs against the result. Every
-    * match whose ref_id is odd is evidence the probe read appended files —
+    * batch ([[graft.ops.Dedup.minhashIndexAppend]] — one sorted delta file
+    * per batch partition beside the partitioned base, no rebuild), and a
+    * probe batch of edited re-crawls drawn from BOTH halves (doc_id % 25 = 0
+    * covers even %50 = 0 and odd %50 = 25 sources) runs against the
+    * result. Every match whose ref_id is odd is evidence the probe read
+    * appended files —
     * a silently-dropped append would return only the even matches, and the
     * oracle (exact Jaccard against the full corpus, which IS even∪odd)
     * would turn the gate red. Same candidate-recall adjudication as

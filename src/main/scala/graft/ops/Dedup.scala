@@ -602,6 +602,12 @@ object Dedup {
     * re-signing the corpus, and appends itself ([[minhashIndexAppend]])
     * without rebuilding — the shape that amortizes at 100 TB.
     *
+    * The signatures live in two tables: this partitioned BASE, and the
+    * unpartitioned append DELTA `path/signatures_delta` that
+    * [[minhashIndexAppend]] writes and [[minhashIndexCompact]] folds back
+    * into the base. A build deletes any delta at `path` first, so a rebuild
+    * never probes stale appends.
+    *
     * A one-row MANIFEST (`path/manifest`: n, numHashes, bands, nBuckets)
     * is written beside the tables: signatures from a different hash family
     * never collide, so a probe or append with mismatched parameters would
@@ -618,6 +624,8 @@ object Dedup {
       idCol: String = "doc_id",
       textCol: String = "text"): Unit = {
     require(nBuckets >= 1, s"nBuckets must be >= 1, got $nBuckets")
+    val (fs, delta) = deltaOf(df.sparkSession, path)
+    fs.delete(delta, true): Unit
     val (hashed, banded) = bandedSignatures(df, n, numHashes, bands, idCol, textCol)
     banded
       .withColumn("bucket", pmod(xxhash64(col("bsig")), lit(nBuckets.toLong)))
@@ -631,13 +639,42 @@ object Dedup {
   }
 
   /** Read the signature-family manifest written by [[minhashIndexBuild]]
-    * as (n, numHashes, bands, nBuckets).
+    * as (n, numHashes, bands, nBuckets) — on the driver, through the
+    * Hadoop `FileSystem`: the manifest is one JSON line, and reading it
+    * through Spark's JSON source would start two jobs (inference, then
+    * `head`) on every append and every probe. A missing or malformed
+    * manifest fails loud with its path.
     */
-  private def readMinhashManifest(
+  private[graft] def readMinhashManifest(
       spark: org.apache.spark.sql.SparkSession, path: String): (Int, Int, Int, Int) = {
-    val m = spark.read.json(s"$path/manifest").head()
-    def g(c: String): Int = m.getLong(m.fieldIndex(c)).toInt
+    import org.apache.hadoop.fs.Path
+    val dir = new Path(s"$path/manifest")
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def bad(why: String) =
+      new IllegalArgumentException(s"MinHash index manifest $dir $why — rebuild the index")
+    if (!fs.exists(dir)) throw bad("does not exist")
+    val lines = fs.listStatus(dir).toSeq
+      .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
+        !f.getPath.getName.startsWith("."))
+      .flatMap { f =>
+        val in = fs.open(f.getPath)
+        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
+        finally in.close()
+      }
+      .map(_.trim).filter(_.nonEmpty)
+    if (lines.size != 1) throw bad(s"holds ${lines.size} rows, expected 1")
+    val m = try new com.fasterxml.jackson.databind.ObjectMapper().readTree(lines.head)
+    catch { case e: java.io.IOException => throw bad(s"is not JSON (${e.getMessage})") }
+    def g(c: String): Int = Option(m.get(c)).filter(_.canConvertToInt).map(_.asInt)
+      .getOrElse(throw bad(s"has no integer field `$c`"))
     (g("n"), g("num_hashes"), g("bands"), g("n_buckets"))
+  }
+
+  /** The append delta of the index at `path` and its filesystem. */
+  private def deltaOf(spark: org.apache.spark.sql.SparkSession, path: String)
+      : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
+    val p = new org.apache.hadoop.fs.Path(s"$path/signatures_delta")
+    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
   /** Fail LOUD when a probe's parameters disagree with the index family —
@@ -660,13 +697,22 @@ object Dedup {
     * write half of the incremental lifecycle ([[nearDupAgainst]] is the
     * read half). The batch is signed with the family recorded in the
     * index manifest (parameters are READ, not passed — an append cannot
-    * diverge from the build), its banded signatures land in the existing
-    * `(band, bucket)` partition directories as new files (parquet
-    * `append` mode adds files without touching sibling partitions), and
-    * its hashed shingle sets append to `path/shingles`. After the append,
-    * the next batch's probe sees this batch's documents — no rebuild, no
-    * corpus rescan: at 100 TB the index ingests deltas forever and a
-    * rebuild happens only when recall drift says so.
+    * diverge from the build). Its banded signatures go to the append DELTA
+    * `path/signatures_delta` — plain columns `(id, band, bsig, bucket)`,
+    * sorted by `(band, bucket)` within each task so row-group stats bound
+    * both columns, one file per batch partition — and never into the
+    * partitioned base, whose files stay untouched. Its hashed shingle sets
+    * append to `path/shingles`. After the append, the next batch's probe
+    * sees this batch's documents — no rebuild, no corpus rescan: at 100 TB
+    * the index ingests deltas forever and a rebuild happens only when
+    * recall drift says so.
+    *
+    * Why a delta: appending into the `(band, bucket)` directories writes
+    * one file per batch partition per touched directory (a 300-document
+    * batch touches every one of 8 × 8), and every file costs a writer, a
+    * footer and a commit rename. The delta costs one file per batch
+    * partition — the LSM shape — and [[minhashIndexCompact]] restores the
+    * pruned base.
     *
     * Dedup discipline: append AFTER admission — probe first
     * ([[nearDupAgainst]]), route matches to your update path, then append
@@ -683,22 +729,34 @@ object Dedup {
     val (hashed, banded) = bandedSignatures(batch, n, numHashes, bands, idCol, textCol)
     banded
       .withColumn("bucket", pmod(xxhash64(col("bsig")), lit(nBuckets.toLong)))
-      .write.mode("append").partitionBy("band", "bucket")
-      .parquet(s"$path/signatures")
+      .sortWithinPartitions("band", "bucket")
+      .write.mode("append")
+      .parquet(deltaOf(spark, path)._2.toString)
     hashed.write.mode("append").parquet(s"$path/shingles")
   }
 
-  /** Fold a MinHash index's accumulated append files back to one file per
-    * `(band, bucket)` partition (and `numFiles` for the unpartitioned
-    * shingle table) — content unchanged, probes identical; see
-    * [[Layout.compactInPlace]] for the swap discipline. Run periodically
-    * from the index's single writer once appends dominate the file count.
+  /** Fold a MinHash index's append delta into its base: base ∪ delta is
+    * rewritten to one file per `(band, bucket)` partition, and the
+    * unpartitioned shingle table to `numFiles` files — content unchanged,
+    * probes identical; see [[Layout.compactInPlace]] for the swap
+    * discipline. The delta is deleted only AFTER the base swap. A crash
+    * between the swap and the delete leaves the delta's rows in both
+    * tables (and a later compaction keeps both copies in the base); the
+    * probe's candidate `distinct()` absorbs such duplicates, so its answer
+    * is unchanged. Compaction is a manual call: run it periodically from
+    * the index's single writer — the same owner appends require — once
+    * appends dominate the file count, never concurrently with an append or
+    * a probe.
     */
   def minhashIndexCompact(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       numFiles: Int = 8): Unit = {
-    Layout.compactInPlace(spark, s"$path/signatures", Seq("band", "bucket"))
+    val (fs, delta) = deltaOf(spark, path)
+    val hasDelta = fs.exists(delta)
+    Layout.compactInPlace(spark, s"$path/signatures", Seq("band", "bucket"),
+      fold = if (hasDelta) Some(Layout.readParquet(spark, delta.toString)) else None)
+    if (hasDelta) fs.delete(delta, true): Unit
     Layout.compactInPlace(spark, s"$path/shingles", Nil, numFiles)
   }
 
@@ -710,6 +768,14 @@ object Dedup {
     * [[minhashLshPairs]] rule) at `threshold`. Output: one row per
     * verified match `(new_id, ref_id, jaccard)` — anti-join the batch
     * against `new_id` to admit, or route matches to an update path.
+    *
+    * The signature side is the partition-pruned base scan, unioned with
+    * the append delta when one exists ([[minhashIndexAppend]]); the same
+    * packed `(band, bucket)` filter applies to both — a planning-time
+    * partition filter on the base, a row filter on the delta. A row in
+    * both tables (a compaction that crashed before deleting the delta)
+    * yields the same candidate pair twice, and the candidate `distinct()`
+    * collapses it.
     *
     * Scale shape: the batch's distinct `(band, bucket)` keys are a BOUNDED
     * set (≤ bands·nBuckets — routing state, like the IVF probe's centroid
@@ -749,18 +815,23 @@ object Dedup {
     // OR-chain's plan grows two nodes per probed partition while the IN
     // stays one InSet node however many partitions a large batch touches.
     val packed = probeKeys.map { case (b, k) => b.toLong * nBuckets + k }
-    val sigs = spark.read.parquet(s"$path/signatures")
-      .filter(packed.headOption.fold(lit(false)) { _ =>
-        (col("band").cast("long") * lit(nBuckets.toLong) + col("bucket"))
-          .isin(packed: _*)
-      })
+    val probed = packed.headOption.fold(lit(false)) { _ =>
+      (col("band").cast("long") * lit(nBuckets.toLong) + col("bucket"))
+        .isin(packed: _*)
+    }
+    def probe(table: String): DataFrame =
+      Layout.readParquet(spark, table).filter(probed)
+        .select(col("id"), col("band"), col("bucket").cast("long").as("bucket"), col("bsig"))
+    val (fs, delta) = deltaOf(spark, path)
+    val base = probe(s"$path/signatures")
+    val sigs = if (fs.exists(delta)) base.union(probe(delta.toString)) else base
     val candidates = ibanded.as("a")
       .join(sigs.as("b"),
         col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
           col("a.bsig") === col("b.bsig"))
       .select(col("a.id").as("new_id"), col("b.id").as("ref_id"))
       .distinct()
-    val refShingles = spark.read.parquet(s"$path/shingles")
+    val refShingles = Layout.readParquet(spark, s"$path/shingles")
     Ordered.smallResult(
       candidates
         .join(ihashed.select(col("id").as("new_id"), col("hs").as("sh1")), "new_id")

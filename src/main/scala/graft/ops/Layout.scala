@@ -51,27 +51,6 @@ object Layout {
       .drop("__z")
   }
 
-  /** Compact a parquet table IN PLACE: rewrite every `partitionCols`
-    * partition directory's accumulated small files into one file per
-    * directory (the append-mode lifecycle — [[graft.ops.Dedup
-    * .minhashIndexAppend]], [[graft.ops.Similarity.ivfAppend]] — adds a
-    * file per batch per partition; a daily-ingest index is thousands of
-    * files per partition within a quarter, and open-file overhead starts
-    * dominating the probes the layout exists to accelerate). Content is
-    * unchanged — only the file layout.
-    *
-    * The rewrite stages to `<path>.__compact_tmp` (reading the live table
-    * while overwriting it in place is not defined in Spark), then swaps
-    * via two FileSystem renames. The swap window is not transactional:
-    * concurrent probes can hit a vanished directory for the instant
-    * between renames, and a crash between them leaves
-    * `<path>.__compact_old` behind (the complete pre-compact table —
-    * rename it back to recover). Run compaction from the single writer
-    * that owns the index, the same owner appends already require.
-    *
-    * `partitionCols` empty = unpartitioned table → `numFiles` output
-    * files.
-    */
   /** Bucketed table layout — the shuffle-ELIMINATION lever for repeated
     * big-to-big joins. Both sides of a recurring join (fact↔fact, e.g.
     * lineitem↔orders on the order key at 100 TB) are written once with
@@ -104,6 +83,58 @@ object Layout {
       .sortBy(bucketCol)
       .format("parquet")
       .saveAsTable(table)
+  }
+
+  // ----------------------------------------------------------- table opens
+
+  /** `spark.read.parquet(path)` without its schema-inference job. Inference
+    * reads one footer inside a one-task Spark job — for a small dashboard
+    * panel or an index probe, a job per opened table before any real work.
+    * Here the SAME footer is read on the driver: the file Spark's
+    * non-merging inference picks (`_common_metadata`, else `_metadata`,
+    * else the first data file by path), converted by Spark's own converter
+    * under the session conf and preferring the Spark row metadata a Spark
+    * writer stored — exactly `ParquetFileFormat.readSchemaFromFooter` — so
+    * type rules stay Spark's. On a `partitionBy` table the footer holds the
+    * data columns only; the reader infers the partition columns from the
+    * directory names as before and appends them after the data columns.
+    * The schema is read on every call and never cached: a table rewritten
+    * in place under the same path is read with its new schema. A missing or
+    * empty path falls through to Spark's own inference, which fails loud
+    * exactly as before.
+    */
+  private[graft] def readParquet(
+      spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
+    footerSchema(spark, path)
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+
+  private def footerSchema(
+      spark: org.apache.spark.sql.SparkSession,
+      path: String): Option[org.apache.spark.sql.types.StructType] = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+    import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
+    import org.apache.spark.sql.execution.datasources.parquet._
+    val root = new Path(path)
+    val conf = spark.sessionState.newHadoopConf()
+    if (!root.getFileSystem(conf).exists(root)) None
+    else {
+      // The listing the reader itself does (hidden-file and partition rules).
+      val leaves = new InMemoryFileIndex(spark, Seq(root), Map.empty, None)
+        .allFiles().sortBy(_.getPath.toString)
+      val summaries = Seq(
+        ParquetFileWriter.PARQUET_COMMON_METADATA_FILE, ParquetFileWriter.PARQUET_METADATA_FILE)
+      summaries.flatMap(n => leaves.find(_.getPath.getName == n)).headOption
+        .orElse(leaves.find(f => !summaries.contains(f.getPath.getName)))
+        .map { f =>
+          val footer = ParquetFooterReader.readFooter(
+            HadoopInputFile.fromStatus(f, conf), SKIP_ROW_GROUPS)
+          ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
+            new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+        }
+    }
   }
 
   // ---------------------------------------------------------------- zone maps
@@ -620,11 +651,36 @@ object Layout {
     manifestPatchDirs(spark, tablePath, touched.map(v => s"$partitionCol=$v"))
   }
 
+  /** Compact a parquet table IN PLACE: rewrite every `partitionCols`
+    * partition directory's accumulated small files into one file per
+    * directory (the append-mode lifecycle — [[graft.ops.Similarity.ivfAppend]]
+    * — adds a file per batch per partition; a daily-ingest index is
+    * thousands of files per partition within a quarter, and open-file
+    * overhead starts dominating the probes the layout exists to
+    * accelerate). Content is unchanged — only the file layout — except that
+    * the rows of `fold`, when given, are rewritten into the table too (an
+    * append delta kept beside it, [[graft.ops.Dedup.minhashIndexAppend]]);
+    * `fold` must carry the table's columns by name, and the caller deletes
+    * its source after this returns.
+    *
+    * The rewrite stages to `<path>.__compact_tmp` (reading the live table
+    * while overwriting it in place is not defined in Spark), then swaps
+    * via two FileSystem renames. The swap window is not transactional:
+    * concurrent probes can hit a vanished directory for the instant
+    * between renames, and a crash between them leaves
+    * `<path>.__compact_old` behind (the complete pre-compact table —
+    * rename it back to recover). Run compaction from the single writer
+    * that owns the index, the same owner appends already require.
+    *
+    * `partitionCols` empty = unpartitioned table → `numFiles` output
+    * files.
+    */
   def compactInPlace(
       spark: org.apache.spark.sql.SparkSession,
       tablePath: String,
       partitionCols: Seq[String],
-      numFiles: Int = 1): Unit = {
+      numFiles: Int = 1,
+      fold: Option[DataFrame] = None): Unit = {
     import org.apache.hadoop.fs.Path
     val table = new Path(tablePath)
     val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -643,7 +699,8 @@ object Layout {
         spark.read.parquet(manifestP.toString).columns
           .filter(_.startsWith("min_")).map(_.stripPrefix("min_")).toSeq
       else Seq.empty
-    val df = spark.read.parquet(tablePath)
+    val live = readParquet(spark, tablePath)
+    val df = fold.map(live.unionByName(_)).getOrElse(live)
     val rewrite =
       if (partitionCols.nonEmpty)
         // Hash-repartition on the partition keys: every directory's rows

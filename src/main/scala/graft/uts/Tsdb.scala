@@ -266,18 +266,8 @@ object Tsdb {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     readParquet(spark, s"$dir/$name.parquet")
 
-  /** `spark.read.parquet(path)` without its schema-inference job. Inference
-    * reads one footer inside a one-task Spark job — on a dashboard of small
-    * panels, a job per panel before any query runs. Here the SAME footer is
-    * read on the driver: the file Spark's non-merging inference picks
-    * (`_common_metadata`, else `_metadata`, else the first data file by
-    * path), converted by Spark's own converter under the session conf and
-    * preferring the Spark row metadata a Spark writer stored — exactly
-    * `ParquetFileFormat.readSchemaFromFooter` — so the stored `ts` type rules
-    * stay Spark's. The schema is read on every call and never cached: a
-    * snapshot rewritten in place under the same path is read with its new
-    * schema. A missing or empty path falls through to Spark's own inference,
-    * which fails loud exactly as before.
+  /** `spark.read.parquet(path)` without its schema-inference job — the
+    * driver-side footer read of [[graft.ops.Layout.readParquet]].
     *
     * The legacy nanos-as-long conf is set here, for every corpus read: a
     * TIMESTAMP(NANOS) column (which Spark 4 otherwise rejects with
@@ -286,35 +276,6 @@ object Tsdb {
     */
   private[uts] def readParquet(spark: SparkSession, path: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    footerSchema(spark, path)
-      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
-  }
-
-  private def footerSchema(
-      spark: SparkSession, path: String): Option[org.apache.spark.sql.types.StructType] = {
-    import org.apache.hadoop.fs.Path
-    import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
-    import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
-    import org.apache.spark.sql.execution.datasources.parquet._
-    val root = new Path(path)
-    val conf = spark.sessionState.newHadoopConf()
-    if (!root.getFileSystem(conf).exists(root)) None
-    else {
-      // The listing the reader itself does (hidden-file and partition rules).
-      val leaves = new InMemoryFileIndex(spark, Seq(root), Map.empty, None)
-        .allFiles().sortBy(_.getPath.toString)
-      val summaries = Seq(
-        ParquetFileWriter.PARQUET_COMMON_METADATA_FILE, ParquetFileWriter.PARQUET_METADATA_FILE)
-      summaries.flatMap(n => leaves.find(_.getPath.getName == n)).headOption
-        .orElse(leaves.find(f => !summaries.contains(f.getPath.getName)))
-        .map { f =>
-          val footer = ParquetFooterReader.readFooter(
-            HadoopInputFile.fromStatus(f, conf), SKIP_ROW_GROUPS)
-          ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
-            new ParquetToSparkSchemaConverter(spark.sessionState.conf))
-        }
-    }
+    graft.ops.Layout.readParquet(spark, path)
   }
 }

@@ -6,6 +6,25 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local SparkSession for specs. */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** `body`'s result and the number of Spark jobs it started — the count
+    * job budgets are pinned in (the same on every host, unlike timings).
+    */
+  def jobsOf[A](body: => A): (A, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    org.apache.spark.GraftTestBus.waitUntilEmpty(sc)
+    sc.addSparkListener(l)
+    try {
+      val a = body
+      org.apache.spark.GraftTestBus.waitUntilEmpty(sc)
+      (a, jobs.get())
+    } finally sc.removeSparkListener(l)
+  }
 }
 
 object SparkSpec {

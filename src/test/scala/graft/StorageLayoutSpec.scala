@@ -14,6 +14,14 @@ class StorageLayoutSpec extends SparkSpec {
   private def tmpDir(): String =
     java.nio.file.Files.createTempDirectory("graft-layout").toString
 
+  private def walk(root: String): Seq[java.io.File] = {
+    def go(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) Option(f.listFiles).toSeq.flatten.flatMap(go) else Seq(f)
+    go(new java.io.File(root))
+  }
+  private def parquetFiles(root: String): Seq[String] =
+    walk(root).map(_.getPath).filter(_.endsWith(".parquet"))
+
   test("bucketed tables join without a shuffle exchange on either side") {
     val dir = tmpDir()
     val left = (0L until 1000L).map(i => (i % 100, i)).toDF("k", "v")
@@ -154,16 +162,16 @@ class StorageLayoutSpec extends SparkSpec {
       probe, s"$dir/idx", n = 3, threshold = 0.6).collect()
     assert(before.isEmpty, before.mkString(", "))
 
-    def files(): Set[String] = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) Option(f.listFiles).toSeq.flatten.flatMap(walk) else Seq(f)
-      walk(new java.io.File(s"$dir/idx/signatures"))
-        .map(_.getPath).filter(_.endsWith(".parquet")).toSet
-    }
-    val preFiles = files()
+    // Every file under the base, with a digest of its bytes (.crc and
+    // _SUCCESS too).
+    def contents(root: String): Map[String, String] = walk(root).map { f =>
+      f.getPath -> java.security.MessageDigest.getInstance("SHA-256")
+        .digest(java.nio.file.Files.readAllBytes(f.toPath)).map("%02x".format(_)).mkString
+    }.toMap
+    val preBase = contents(s"$dir/idx/signatures")
 
     // Append the batch containing doc 200, then re-probe: the match
-    // appears — served purely from appended files.
+    // appears — served purely from the appended delta.
     val batch = Seq((200L, mk(200L))).toDF("doc_id", "text")
     graft.ops.Dedup.minhashIndexAppend(batch, s"$dir/idx")
     val after = graft.ops.Dedup.nearDupAgainst(
@@ -171,18 +179,16 @@ class StorageLayoutSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(after.contains((300L, 200L)), after.mkString(", "))
 
-    // The append added files ONLY under the batch's own (band, bucket)
-    // partitions — sibling partitions are untouched (append-mode parquet
-    // adds files; it must not rewrite the index).
-    val newFiles = files() -- preFiles
-    assert(newFiles.nonEmpty)
-    val batchParts = spark.read.parquet(s"$dir/idx/signatures")
-      .filter(col("id") === 200L)
-      .select(col("band"), col("bucket")).distinct().collect()
-      .map(r => s"band=${r.get(0)}/bucket=${r.get(1)}").toSet
-    newFiles.foreach { f =>
-      assert(batchParts.exists(p => f.contains(p)),
-        s"append wrote outside the batch's partitions: $f not in $batchParts")
+    // The append left the partitioned base byte-identical and added one
+    // delta file per batch partition, holding only the batch's ids.
+    val postBase = contents(s"$dir/idx/signatures")
+    assert(postBase == preBase,
+      s"base files changed: ${(postBase.toSet diff preBase.toSet).map(_._1).mkString(", ")}")
+    val deltaFiles = parquetFiles(s"$dir/idx/signatures_delta")
+    assert(deltaFiles.size == batch.rdd.getNumPartitions, deltaFiles.mkString(", "))
+    deltaFiles.foreach { f =>
+      val ids = spark.read.parquet(f).select("id").distinct().as[Long].collect().toSet
+      assert(ids == Set(200L), s"$f holds $ids")
     }
   }
 
@@ -481,9 +487,10 @@ class StorageLayoutSpec extends SparkSpec {
       walk(new java.io.File(path)).map(_.getPath).filter(_.endsWith(".parquet"))
         .groupBy(p => p.substring(0, p.lastIndexOf('/'))).map { case (k, v) => (k, v.size) }
     }
-    assert(filesPerPartition(s"$dir/idx/signatures").values.max > 1)
+    assert(filesPerPartition(s"$dir/idx/signatures_delta").values.sum == 3)
 
     graft.ops.Dedup.minhashIndexCompact(spark, s"$dir/idx")
+    assert(!new java.io.File(s"$dir/idx/signatures_delta").exists())
     assert(filesPerPartition(s"$dir/idx/signatures").values.max == 1)
     // Identical probe answer from the compacted layout.
     val post = graft.ops.Dedup.nearDupAgainst(probe, s"$dir/idx", n = 3, threshold = 0.6)
@@ -491,6 +498,110 @@ class StorageLayoutSpec extends SparkSpec {
     assert(post == pre, s"pre=$pre post=$post")
     // The manifest survives compaction (it lives beside the tables).
     graft.ops.Dedup.nearDupAgainst(probe, s"$dir/idx", n = 3, threshold = 0.6).collect()
+  }
+
+  test("minhash rebuild at the same path drops the old append delta") {
+    val dir = tmpDir()
+    val mk = (i: Long) =>
+      s"alpha bravo charlie delta echo foxtrot golf hotel doc$i marker$i tail$i"
+    val corpus = (0L until 20L).map(i => (i, mk(i))).toDF("doc_id", "text")
+    graft.ops.Dedup.minhashIndexBuild(corpus, s"$dir/idx", n = 3)
+    graft.ops.Dedup.minhashIndexAppend(Seq((200L, mk(200L))).toDF("doc_id", "text"), s"$dir/idx")
+    val probe = Seq((300L, mk(200L) + " recrawl")).toDF("doc_id", "text")
+    def matches() = graft.ops.Dedup.nearDupAgainst(probe, s"$dir/idx", n = 3, threshold = 0.6)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(matches().contains((300L, 200L)))
+    // Doc 200 is in the delta only; a rebuild from a corpus without it must
+    // not keep serving it.
+    graft.ops.Dedup.minhashIndexBuild(corpus, s"$dir/idx", n = 3)
+    assert(!new java.io.File(s"$dir/idx/signatures_delta").exists())
+    assert(matches().isEmpty)
+  }
+
+  test("minhash probe over base and delta sharing rows answers as the base alone") {
+    val dir = tmpDir()
+    val mk = (i: Long) =>
+      s"alpha bravo charlie delta echo foxtrot golf hotel doc$i marker$i tail$i"
+    val corpus = (0L until 20L).map(i => (i, mk(i))).toDF("doc_id", "text")
+    graft.ops.Dedup.minhashIndexBuild(corpus, s"$dir/idx", n = 3)
+    graft.ops.Dedup.minhashIndexAppend(
+      Seq((200L, mk(200L)), (201L, mk(7L) + " twin")).toDF("doc_id", "text"), s"$dir/idx")
+    val probe = Seq((300L, mk(200L) + " recrawl"), (301L, mk(7L) + " recrawl"))
+      .toDF("doc_id", "text")
+    def answer() = graft.ops.Dedup.nearDupAgainst(probe, s"$dir/idx", n = 3, threshold = 0.6)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    // A compaction that crashed after its swap but before deleting the
+    // delta: the delta's rows are in the base AND still in the delta.
+    val delta = new java.io.File(s"$dir/idx/signatures_delta").toPath
+    val saved = new java.io.File(s"$dir/saved_delta").toPath
+    org.apache.commons.io.FileUtils.copyDirectory(delta.toFile, saved.toFile)
+    graft.ops.Dedup.minhashIndexCompact(spark, s"$dir/idx")
+    val baseAlone = answer()
+    assert(baseAlone.map(m => (m._1, m._2)).toSet ==
+      Set((300L, 200L), (301L, 7L), (301L, 201L)), baseAlone.mkString(", "))
+    org.apache.commons.io.FileUtils.copyDirectory(saved.toFile, delta.toFile)
+    assert(answer() == baseAlone)
+  }
+
+  test("a one-partition minhash append writes 2 data files; index opens start no job") {
+    val dir = tmpDir()
+    val mk = (i: Long) =>
+      s"alpha bravo charlie delta echo foxtrot golf hotel doc$i marker$i tail$i"
+    graft.ops.Dedup.minhashIndexBuild(
+      (0L until 20L).map(i => (i, mk(i))).toDF("doc_id", "text"), s"$dir/idx", n = 3)
+    val batch = (200L until 230L).map(i => (i, mk(i))).toDF("doc_id", "text").coalesce(1)
+    val before = parquetFiles(s"$dir/idx").toSet
+    graft.ops.Dedup.minhashIndexAppend(batch, s"$dir/idx")
+    val added = parquetFiles(s"$dir/idx").toSet -- before
+    assert(added.size == 2, added.mkString(", "))
+    assert(added.count(_.contains("/signatures_delta/")) == 1, added.mkString(", "))
+    assert(added.count(_.contains("/shingles/")) == 1, added.mkString(", "))
+    // Opening the index reads its manifest and table footers on the driver.
+    val (family, manifestJobs) = jobsOf(graft.ops.Dedup.readMinhashManifest(spark, s"$dir/idx"))
+    assert(family == ((3, 32, 8, 16)))
+    assert(manifestJobs == 0, s"manifest read started $manifestJobs job(s)")
+    val (_, openJobs) = jobsOf(Seq("signatures", "signatures_delta", "shingles")
+      .map(t => graft.ops.Layout.readParquet(spark, s"$dir/idx/$t").schema))
+    assert(openJobs == 0, s"table opens started $openJobs job(s)")
+  }
+
+  test("footer-schema open of the partitioned signatures equals Spark's inference") {
+    import org.apache.spark.sql.types._
+    val dir = tmpDir()
+    val corpus = (0L until 20L).map(i => (i, s"some words for document number $i here"))
+      .toDF("doc_id", "text")
+    graft.ops.Dedup.minhashIndexBuild(corpus, s"$dir/idx", n = 3)
+    graft.ops.Dedup.minhashIndexAppend(corpus.limit(3), s"$dir/idx")
+    for (t <- Seq("signatures", "signatures_delta", "shingles")) {
+      val p = s"$dir/idx/$t"
+      assert(graft.ops.Layout.readParquet(spark, p).schema == spark.read.parquet(p).schema, p)
+    }
+    // Partition columns come after the data columns, typed as inferred.
+    val sigs = graft.ops.Layout.readParquet(spark, s"$dir/idx/signatures").schema
+    assert(sigs.fieldNames.toSeq == Seq("id", "bsig", "band", "bucket"), sigs)
+    assert(sigs("band").dataType == IntegerType && sigs("bucket").dataType == IntegerType, sigs)
+  }
+
+  test("minhash manifest read fails loud and names the path") {
+    val dir = tmpDir()
+    val corpus = (0L until 10L)
+      .map(i => (i, s"some words for document number $i here")).toDF("doc_id", "text")
+    graft.ops.Dedup.minhashIndexBuild(corpus, s"$dir/idx", n = 3)
+    val manifest = new java.io.File(s"$dir/idx/manifest")
+    // A hand-edited manifest: one part file of new bytes, no checksum file.
+    manifest.listFiles.filter(_.getName != "_SUCCESS").foreach(_.delete())
+    java.nio.file.Files.write(new java.io.File(manifest, "part-00000.json").toPath,
+      "{\"n\": 3, not json".getBytes("UTF-8"))
+    val e1 = intercept[IllegalArgumentException] {
+      graft.ops.Dedup.minhashIndexAppend(corpus, s"$dir/idx")
+    }
+    assert(e1.getMessage.contains(manifest.getPath) && e1.getMessage.contains("JSON"),
+      e1.getMessage)
+    org.apache.commons.io.FileUtils.deleteDirectory(manifest)
+    val e2 = intercept[IllegalArgumentException] {
+      graft.ops.Dedup.nearDupAgainst(corpus, s"$dir/idx", n = 3, threshold = 0.6)
+    }
+    assert(e2.getMessage.contains(manifest.getPath), e2.getMessage)
   }
 
   test("minhash probe and append fail loud on a signature-family mismatch") {

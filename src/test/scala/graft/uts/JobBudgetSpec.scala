@@ -1,7 +1,6 @@
 package graft.uts
 
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 
 /** Spark-job budgets of the dashboard path. A `tsdb` panel is small, so the
@@ -24,21 +23,6 @@ class JobBudgetSpec extends SparkSpec {
   }
   private lazy val now = Tsdb.events(spark, snap).df
     .agg(org.apache.spark.sql.functions.max("time")).head().getLong(0)
-
-  private def jobsOf[A](body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
-    org.apache.spark.GraftTestBus.waitUntilEmpty(sc)
-    sc.addSparkListener(l)
-    try {
-      val a = body
-      org.apache.spark.GraftTestBus.waitUntilEmpty(sc)
-      (a, jobs.get())
-    } finally sc.removeSparkListener(l)
-  }
 
   test("opening a parquet snapshot starts no Spark job") {
     snap
