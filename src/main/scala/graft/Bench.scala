@@ -388,11 +388,10 @@ object Bench {
     s"""{"metric":"total","value":${d3(total)},"unit":"sec","n":${results.size},"errored":$nErr,"retried":${retried.size},"ref_flagged":${refFlaggedQs.size},"calib_first":${d3(calib.head._2)},"calib_last":${d3(calib.last._2)}$cpusJson$calibParJson,"top":$top}"""
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    require(reps >= 1, s"SPARK_GRAFT_BENCH_REPS must be >= 1, got $reps")
+  /** The `local[cpus]` session the harness mains (Bench, BenchProbe,
+    * Verify) run the registry on.
+    */
+  def session(cpus: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -400,16 +399,28 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** JIT + parquet-footer + page-cache warmup so per-query numbers measure
+    * the plan, not first-touch JVM/IO costs; excluded from all timings. One
+    * cheap query per table family (lineitem+dims, events, documents,
+    * embeddings).
+    */
+  val WarmupQueries: Seq[String] = Seq("q1_agg", "q5_nation_revenue",
+    "uts_global_metrics", "text_stats", "sim_topk_cosine")
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
+    require(reps >= 1, s"SPARK_GRAFT_BENCH_REPS must be >= 1, got $reps")
+    val spark = session(cpus)
     val nCpus = scala.util.Try(cpus.toInt).toOption.getOrElse(32)
     val calibParStart = cpuCalibPar(nCpus)
     val calib = scala.collection.mutable.ArrayBuffer((-1, cpuCalib()))
     val storage = scala.collection.mutable.ArrayBuffer(storageMb(spark))
-    // JIT + parquet-footer + page-cache warmup so per-query numbers measure
-    // the plan, not first-touch JVM/IO costs; excluded from all timings. One
-    // cheap query per table family (lineitem+dims, events, documents,
-    // embeddings).
-    for (w <- Seq("q1_agg", "q5_nation_revenue", "uts_global_metrics",
-        "text_stats", "sim_topk_cosine"))
+    for (w <- WarmupQueries)
       SparkEntry.queries(w)(spark, sfDir).write.mode("overwrite").format("noop").save()
     graft.ops.Materialize.releaseTransients()
     // Optional comma-separated query filter for local iteration (the driver

@@ -4,7 +4,6 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
   SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Per-query measurement probe (optimization-guide §1: measure first).
@@ -70,13 +69,7 @@ object BenchProbe {
     val reps = sys.env.getOrElse("SPARK_GRAFT_PROBE_REPS", "3").toInt
     val planDir = sys.env.get("SPARK_GRAFT_PROBE_PLANDIR")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PROBE_SUFFIX", "probe")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session(cpus)
     // Optional materialization-gate override so gated plans can be dumped
     // as evidence (e.g. SPARK_GRAFT_MATERIALIZE_MAXBYTES=1 shows a query's
     // reliable-mode above-gate shape without flipping the mode).
@@ -84,9 +77,7 @@ object BenchProbe {
       spark.conf.set(graft.ops.Materialize.TransientMaxConf, v))
     val counters = new Counters
     spark.sparkContext.addSparkListener(counters)
-    // Same JIT/footer/page-cache warmup set as Bench.
-    for (w <- Seq("q1_agg", "q5_nation_revenue", "uts_global_metrics",
-        "text_stats", "sim_topk_cosine"))
+    for (w <- Bench.WarmupQueries)
       SparkEntry.queries(w)(spark, sfDir).write.mode("overwrite").format("noop").save()
 
     for (name <- args) {

@@ -747,79 +747,21 @@ object Multimodal {
     * all five un-filter paths, not just filter-0. JVM-side (Deflater needs
     * bytes, not Columns) — gates plant with this inside the same
     * mapPartitions batch shape the decode uses. Channels map to color
-    * types 1→0 (gray), 2→4 (gray+alpha), 3→2 (RGB), 4→6 (RGBA).
+    * types 1→0 (gray), 2→4 (gray+alpha), 3→2 (RGB), 4→6 (RGBA). The
+    * sequential 8-bit case of [[pngEncodeRaster]].
     */
   def pngEncode(
       width: Int, height: Int, channels: Int,
-      pixels: Array[Byte], filterOfRow: Int => Int): Array[Byte] = {
-    require(width >= 1 && height >= 1, s"bad dims ${width}x$height")
-    val colorType = channels match {
-      case 1 => 0; case 2 => 4; case 3 => 2; case 4 => 6
-      case n => throw new IllegalArgumentException(s"channels must be 1..4, got $n")
-    }
-    val st = width * channels
-    require(pixels.length == st * height,
-      s"raster must be ${st * height} bytes, got ${pixels.length}")
-    val raw = new Array[Byte]((st + 1) * height)
-    var y = 0
-    while (y < height) {
-      val ft = math.floorMod(filterOfRow(y), 5)
-      raw(y * (st + 1)) = ft.toByte
-      var x = 0
-      while (x < st) {
-        val cur = pixels(y * st + x) & 0xff
-        val a = if (x >= channels) pixels(y * st + x - channels) & 0xff else 0
-        val b = if (y > 0) pixels((y - 1) * st + x) & 0xff else 0
-        val c = if (x >= channels && y > 0) pixels((y - 1) * st + x - channels) & 0xff else 0
-        val enc = ft match {
-          case 0 => cur
-          case 1 => cur - a
-          case 2 => cur - b
-          case 3 => cur - (a + b) / 2
-          case 4 =>
-            val pp = a + b - c
-            val pa = math.abs(pp - a); val pb = math.abs(pp - b)
-            val pc = math.abs(pp - c)
-            cur - (if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c)
-        }
-        raw(y * (st + 1) + 1 + x) = (enc & 0xff).toByte
-        x += 1
-      }
-      y += 1
-    }
-    val defl = new java.util.zip.Deflater()
-    defl.setInput(raw); defl.finish()
-    val idat = new java.io.ByteArrayOutputStream()
-    val buf = new Array[Byte](8192)
-    while (!defl.finished()) idat.write(buf, 0, defl.deflate(buf))
-    defl.end()
-    val outBuf = new java.io.ByteArrayOutputStream()
-    def be32(v: Long): Array[Byte] = Array(
-      ((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte,
-      ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-    def chunk(tag: String, body: Array[Byte]): Unit = {
-      outBuf.write(be32(body.length.toLong), 0, 4)
-      val tb = tag.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-      val crc = new java.util.zip.CRC32()
-      crc.update(tb); crc.update(body)
-      outBuf.write(tb, 0, 4)
-      outBuf.write(body, 0, body.length)
-      outBuf.write(be32(crc.getValue), 0, 4)
-    }
-    outBuf.write(Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte), 0, 8)
-    chunk("IHDR", be32(width.toLong) ++ be32(height.toLong) ++
-      Array[Byte](8, colorType.toByte, 0, 0, 0))
-    chunk("IDAT", idat.toByteArray)
-    chunk("IEND", Array.emptyByteArray)
-    outBuf.toByteArray
-  }
+      pixels: Array[Byte], filterOfRow: Int => Int): Array[Byte] =
+    pngEncodeRaster(width, height, channels, 8, 0, pixels, filterOfRow)
 
   /** The PALETTE encode twin: a complete valid color-type-3 PNG — the
     * 8-bit index raster filtered per row exactly like [[pngEncode]]'s
     * (bpp = 1), a PLTE chunk carrying `palette` (RGB triples, ≤ 256
     * entries), deflated IDAT, all CRC'd. [[decodePngPixels]] reads it back
     * THROUGH the indirection as plain RGB, so a fixture pins the palette
-    * lookup path end to end.
+    * lookup path end to end. The sequential 8-bit case of
+    * [[pngEncodePaletteRaster]].
     */
   def pngEncodePalette(
       width: Int, height: Int,
@@ -832,37 +774,7 @@ object Multimodal {
     val n = palette.length / 3
     require(indices.forall(b => (b & 0xff) < n),
       s"an index exceeds the $n-entry palette")
-    // Reuse pngEncode's filtering/deflate/chunk pipeline on the 1-channel
-    // index raster, then rewrite the color type and splice PLTE in —
-    // simpler than duplicating the writer: rebuild chunks here instead.
-    val gray = pngEncode(width, height, 1, indices, filterOfRow)
-    // Extract the deflated IDAT body from the gray encode (one IDAT chunk
-    // at a fixed offset: 8 sig + 25 IHDR).
-    def be32At(a: Array[Byte], i: Int): Int =
-      ((a(i) & 0xff) << 24) | ((a(i + 1) & 0xff) << 16) |
-        ((a(i + 2) & 0xff) << 8) | (a(i + 3) & 0xff)
-    val idatLen = be32At(gray, 33)
-    val idatBody = java.util.Arrays.copyOfRange(gray, 41, 41 + idatLen)
-    val out = new java.io.ByteArrayOutputStream()
-    def be32(v: Long): Array[Byte] = Array(
-      ((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte,
-      ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-    def chunk(tag: String, body: Array[Byte]): Unit = {
-      out.write(be32(body.length.toLong), 0, 4)
-      val tb = tag.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-      val crc = new java.util.zip.CRC32()
-      crc.update(tb); crc.update(body)
-      out.write(tb, 0, 4)
-      out.write(body, 0, body.length)
-      out.write(be32(crc.getValue), 0, 4)
-    }
-    out.write(Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte), 0, 8)
-    chunk("IHDR", be32(width.toLong) ++ be32(height.toLong) ++
-      Array[Byte](8, 3, 0, 0, 0))
-    chunk("PLTE", palette)
-    chunk("IDAT", idatBody)
-    chunk("IEND", Array.emptyByteArray)
-    out.toByteArray
+    pngEncodePaletteRaster(width, height, 8, 0, palette, indices, filterOfRow)
   }
 
   /** The ENCODE twin of [[decodePngRaster]]: a complete valid PNG at any
@@ -882,14 +794,21 @@ object Multimodal {
   def pngEncodeRaster(
       width: Int, height: Int, channels: Int, depth: Int, interlace: Int,
       data: Array[Byte], filterOfRow: Int => Int): Array[Byte] = {
+    val idat = pngIdat(width, height, channels, depth, interlace, data, filterOfRow)
+    pngFrame(width, height, depth, pngColorType(channels), interlace, None, idat)
+  }
+
+  /** Validate a raster for [[pngEncodeRaster]], filter it per scanline
+    * (per Adam7 pass when interlaced) and deflate it: the IDAT body.
+    */
+  private def pngIdat(
+      width: Int, height: Int, channels: Int, depth: Int, interlace: Int,
+      data: Array[Byte], filterOfRow: Int => Int): Array[Byte] = {
     require(width >= 1 && height >= 1, s"bad dims ${width}x$height")
     require(depth == 1 || depth == 2 || depth == 4 || depth == 8 || depth == 16,
       s"depth must be one of 1/2/4/8/16, got $depth")
     require(interlace == 0 || interlace == 1, s"interlace must be 0 or 1, got $interlace")
-    val colorType = channels match {
-      case 1 => 0; case 2 => 4; case 3 => 2; case 4 => 6
-      case n => throw new IllegalArgumentException(s"channels must be 1..4, got $n")
-    }
+    pngColorType(channels) // fails on a bad channel count before the raster checks
     val lowDepth = depth < 8
     require(!lowDepth || channels == 1,
       s"depths 1/2/4 are grayscale-only in PNG, got $channels channels")
@@ -975,53 +894,24 @@ object Multimodal {
     val buf = new Array[Byte](8192)
     while (!defl.finished()) idat.write(buf, 0, defl.deflate(buf))
     defl.end()
-    val outBuf = new java.io.ByteArrayOutputStream()
-    def be32(v: Long): Array[Byte] = Array(
-      ((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte,
-      ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-    def chunk(tag: String, body: Array[Byte]): Unit = {
-      outBuf.write(be32(body.length.toLong), 0, 4)
-      val tb = tag.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-      val crc = new java.util.zip.CRC32()
-      crc.update(tb); crc.update(body)
-      outBuf.write(tb, 0, 4)
-      outBuf.write(body, 0, body.length)
-      outBuf.write(be32(crc.getValue), 0, 4)
-    }
-    outBuf.write(Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte), 0, 8)
-    chunk("IHDR", be32(width.toLong) ++ be32(height.toLong) ++
-      Array[Byte](depth.toByte, colorType.toByte, 0, 0, interlace.toByte))
-    chunk("IDAT", idat.toByteArray)
-    chunk("IEND", Array.emptyByteArray)
-    outBuf.toByteArray
+    idat.toByteArray
   }
 
-  /** PALETTE twin of [[pngEncodeRaster]]: a complete valid color-type-3
-    * PNG at index depth 1/2/4/8, sequential or Adam7 — the index raster
-    * (unpacked, one byte per index) goes through [[pngEncodeRaster]]'s
-    * grayscale pipeline and the PLTE chunk + color type are spliced in
-    * (the [[pngEncodePalette]] technique, generalized). Every index is
-    * validated against BOTH the depth range and the palette size at
-    * encode, mirroring the decoder's strictness.
+  /** PNG color type of a gray/truecolor raster with `channels` samples per
+    * pixel: 1→0 (gray), 2→4 (gray+alpha), 3→2 (RGB), 4→6 (RGBA).
     */
-  def pngEncodePaletteRaster(
-      width: Int, height: Int, depth: Int, interlace: Int,
-      palette: Array[Byte], indices: Array[Byte],
-      filterOfRow: Int => Int): Array[Byte] = {
-    require(depth == 1 || depth == 2 || depth == 4 || depth == 8,
-      s"palette depth must be 1/2/4/8, got $depth")
-    require(palette.nonEmpty && palette.length % 3 == 0 && palette.length <= 768,
-      s"palette must be 3..768 bytes of RGB triples, got ${palette.length}")
-    val n = palette.length / 3
-    require(indices.forall(b => (b & 0xff) < n && (b & 0xff) <= (1 << depth) - 1),
-      s"an index exceeds the $n-entry palette or the depth-$depth range")
-    val gray = pngEncodeRaster(width, height, 1, depth, interlace, indices, filterOfRow)
-    // Splice: IDAT body sits at fixed offsets in the gray encode (8 sig +
-    // 25 IHDR chunk → length at 33, body at 41).
-    def be32At(a: Array[Byte], i: Int): Int =
-      ((a(i) & 0xff) << 24) | ((a(i + 1) & 0xff) << 16) |
-        ((a(i + 2) & 0xff) << 8) | (a(i + 3) & 0xff)
-    val idatBody = java.util.Arrays.copyOfRange(gray, 41, 41 + be32At(gray, 33))
+  private def pngColorType(channels: Int): Int = channels match {
+    case 1 => 0; case 2 => 4; case 3 => 2; case 4 => 6
+    case n => throw new IllegalArgumentException(s"channels must be 1..4, got $n")
+  }
+
+  /** The one PNG framer: signature, IHDR, an optional PLTE, one IDAT
+    * carrying `idat` verbatim and IEND, every chunk length-prefixed and
+    * CRC'd.
+    */
+  private def pngFrame(
+      width: Int, height: Int, depth: Int, colorType: Int, interlace: Int,
+      palette: Option[Array[Byte]], idat: Array[Byte]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
     def be32(v: Long): Array[Byte] = Array(
       ((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte,
@@ -1037,11 +927,34 @@ object Multimodal {
     }
     out.write(Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte), 0, 8)
     chunk("IHDR", be32(width.toLong) ++ be32(height.toLong) ++
-      Array[Byte](depth.toByte, 3, 0, 0, interlace.toByte))
-    chunk("PLTE", palette)
-    chunk("IDAT", idatBody)
+      Array[Byte](depth.toByte, colorType.toByte, 0, 0, interlace.toByte))
+    palette.foreach(chunk("PLTE", _))
+    chunk("IDAT", idat)
     chunk("IEND", Array.emptyByteArray)
     out.toByteArray
+  }
+
+  /** PALETTE twin of [[pngEncodeRaster]]: a complete valid color-type-3
+    * PNG at index depth 1/2/4/8, sequential or Adam7 — the index raster
+    * (unpacked, one byte per index) is filtered and deflated by
+    * [[pngEncodeRaster]]'s grayscale pipeline and framed with color type 3
+    * and a PLTE chunk. Every index is
+    * validated against BOTH the depth range and the palette size at
+    * encode, mirroring the decoder's strictness.
+    */
+  def pngEncodePaletteRaster(
+      width: Int, height: Int, depth: Int, interlace: Int,
+      palette: Array[Byte], indices: Array[Byte],
+      filterOfRow: Int => Int): Array[Byte] = {
+    require(depth == 1 || depth == 2 || depth == 4 || depth == 8,
+      s"palette depth must be 1/2/4/8, got $depth")
+    require(palette.nonEmpty && palette.length % 3 == 0 && palette.length <= 768,
+      s"palette must be 3..768 bytes of RGB triples, got ${palette.length}")
+    val n = palette.length / 3
+    require(indices.forall(b => (b & 0xff) < n && (b & 0xff) <= (1 << depth) - 1),
+      s"an index exceeds the $n-entry palette or the depth-$depth range")
+    pngFrame(width, height, depth, 3, interlace, Some(palette),
+      pngIdat(width, height, 1, depth, interlace, indices, filterOfRow))
   }
 
   /** Pack an `Array[Int]` of 16-bit samples (0..65535) into the big-endian
@@ -1234,25 +1147,7 @@ object Multimodal {
       width: Int, height: Int, depth: Int, colorType: Int, interlace: Int,
       idat: Array[Byte]): Array[Byte] = {
     require(width >= 1 && height >= 1, s"bad dims ${width}x$height")
-    val outBuf = new java.io.ByteArrayOutputStream()
-    def be32(v: Long): Array[Byte] = Array(
-      ((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte,
-      ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-    def chunk(tag: String, body: Array[Byte]): Unit = {
-      outBuf.write(be32(body.length.toLong), 0, 4)
-      val tb = tag.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-      val crc = new java.util.zip.CRC32()
-      crc.update(tb); crc.update(body)
-      outBuf.write(tb, 0, 4)
-      outBuf.write(body, 0, body.length)
-      outBuf.write(be32(crc.getValue), 0, 4)
-    }
-    outBuf.write(Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte), 0, 8)
-    chunk("IHDR", be32(width.toLong) ++ be32(height.toLong) ++
-      Array[Byte](depth.toByte, colorType.toByte, 0, 0, interlace.toByte))
-    chunk("IDAT", idat)
-    chunk("IEND", Array.emptyByteArray)
-    outBuf.toByteArray
+    pngFrame(width, height, depth, colorType, interlace, None, idat)
   }
 
   def extractFeatures(spark: SparkSession, media: DataFrame): Dataset[MediaFeatures] = {

@@ -1397,7 +1397,7 @@ object Similarity {
       idCol: String = "vec_id",
       vecCol: String = "embedding",
       extraCols: Seq[String] = Seq("label")): Unit = {
-    val centroids = batch.sparkSession.read.parquet(s"$path/centroids")
+    val centroids = Layout.readParquet(batch.sparkSession, s"$path/centroids")
     assignedOf(batch, centroids, idCol, vecCol, extraCols)
       .write.mode("append").partitionBy("cluster").parquet(s"$path/vectors")
   }
@@ -1488,7 +1488,7 @@ object Similarity {
       vecCol: String = "embedding"): DataFrame = {
     val probed = probedClustersOf(spark, path, query, nprobe)
     val qlit = typedlit(query.toSeq)
-    val vecs = spark.read.parquet(s"$path/vectors")
+    val vecs = Layout.readParquet(spark, s"$path/vectors")
       .filter(col("cluster").isin(probed: _*))
     val base = excludeId.fold(vecs)(id => vecs.filter(col(idCol) =!= id))
     val outCols = base.columns.filter(c => c != vecCol && c != "cluster")
@@ -1513,7 +1513,7 @@ object Similarity {
       query: Array[Double],
       nprobe: Int): Seq[Any] = {
     val qn = math.sqrt(blasDot(query, query))
-    spark.read.parquet(s"$path/centroids")
+    Layout.readParquet(spark, s"$path/centroids")
       .collect()
       .map { r =>
         val cv = r.getSeq[Double](r.fieldIndex("cvec")).toArray

@@ -4,12 +4,12 @@ import org.apache.spark.sql.functions._
 
 /** Stage cost breakdown for `pairsAboveBanded` at the 10× derived corpus —
   * answers "where do the 17 s at sf1 go": the signature pass, the candidate
-  * band join, or the exact verification join-back. Scratch instrument
-  * (like [[IsoProbe]]), not part of the library surface. The `graft.tools`
+  * band join, or the exact verification join-back. Scratch instrument,
+  * not part of the library surface. The `graft.tools`
   * package is the repo's ACCEPTED home for such probe mains — they ship in
   * the jar with machine-specific defaults (local[32], /root/repo paths) by
   * convention, because a separate bench source set would cost more build
-  * machinery than two tiny mains justify; nothing in the library depends
+  * machinery than a tiny main justifies; nothing in the library depends
   * on this package.
   */
 object BandedProbe {

@@ -67,8 +67,11 @@ class StorageLayoutSpec extends SparkSpec {
     val df = rows.toDF("vec_id", "embedding", "label")
     graft.ops.Similarity.ivfBuild(df, s"$dir/idx")
     val q = rows.head._2.map(_.toDouble).toArray
-    val probe = graft.ops.Similarity.ivfProbePersisted(
-      spark, s"$dir/idx", q, k = 5, nprobe = 2, excludeId = Some(0L))
+    val (probe, probeJobs) = jobsOf(graft.ops.Similarity.ivfProbePersisted(
+      spark, s"$dir/idx", q, k = 5, nprobe = 2, excludeId = Some(0L)))
+    // Planning the probe collects the centroid table (one job); the
+    // centroid and vector tables open from their footers without a job.
+    assert(probeJobs == 1, s"probe planning started $probeJobs job(s)")
     val got = probe.collect()
 
     // 1. Results equal the in-plan ivfTopK over the same corpus: same

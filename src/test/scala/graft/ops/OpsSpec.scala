@@ -1974,6 +1974,48 @@ class OpsSpec extends SparkSpec {
       100, 100, 0, 0, 100, 100, 0, 0))
   }
 
+  test("PNG writers: byte-identical output on pinned rasters (SHA-256 per writer)") {
+    // Each writer's outputs over fixed rasters, concatenated and hashed.
+    // The digests were recorded from the five separate writers before
+    // they shared one framer; any change in filtering, deflate settings,
+    // chunk order or IHDR bytes shows here.
+    def sha(parts: Seq[Array[Byte]]): String =
+      java.security.MessageDigest.getInstance("SHA-256")
+        .digest(parts.reduce(_ ++ _)).map(b => f"$b%02x").mkString
+    def raster(n: Int, mod: Int, salt: Int): Array[Byte] =
+      Array.tabulate(n)(k => ((k * 37 + salt * 11) % mod).toByte)
+    val pal = Array.tabulate(3 * 16)(k => ((k * 53 + 7) % 256).toByte)
+    val got = Map(
+      "pngEncode" -> sha(for (ch <- 1 to 4)
+        yield Multimodal.pngEncode(7, 6, ch, raster(7 * 6 * ch, 256, ch), _ % 5)),
+      "pngEncodePalette" -> sha(Seq(
+        Multimodal.pngEncodePalette(5, 4, pal, raster(20, 16, 1), _ % 5))),
+      "pngEncodeRaster" -> sha(for {
+        (depth, ch) <- Seq((1, 1), (2, 1), (4, 1), (8, 3), (16, 2))
+        il <- 0 to 1
+        n = 9 * 7 * (if (depth < 8) 1 else ch * depth / 8)
+      } yield Multimodal.pngEncodeRaster(9, 7, ch, depth, il,
+        raster(n, if (depth < 8) 1 << depth else 256, depth), r => (r + il) % 5)),
+      "pngEncodePaletteRaster" -> sha(for (depth <- Seq(1, 2, 4, 8); il <- 0 to 1)
+        yield Multimodal.pngEncodePaletteRaster(9, 7, depth, il, pal,
+          raster(63, math.min(16, 1 << depth), depth), r => (r + 2) % 5)),
+      "pngContainer" -> sha(Seq(
+        Multimodal.pngContainer(6, 4, 16, 0, 0, Array[Byte](1, 2, 3)),
+        Multimodal.pngContainer(6, 4, 8, 2, 1, Array.emptyByteArray))))
+    val want = Map(
+      "pngEncode" ->
+        "ae7db3f67b863ec21260e77fd31fd3c097a092e4d9999de5ef504dc9108f20b7",
+      "pngEncodePalette" ->
+        "99fc74dcd02af348c9a33ade913d1593d049cf79ce2ad741c45e9e359b384548",
+      "pngEncodeRaster" ->
+        "039aa3d2e7ab29dc777ae369bfbbd3d8a48e30f91453984eff15114ddc47fb68",
+      "pngEncodePaletteRaster" ->
+        "7593cd1632570dfad29ebb3662c541a33ab6b1276b2aa8c5796ffeda4c534c9d",
+      "pngContainer" ->
+        "cd0ffa5a42ff7c76c9cffccdedccd41626caf9ab24dea99df8981ef83936c50b")
+    assert(got == want)
+  }
+
   test("pngCodecTag fails loud on short or non-PNG payloads") {
     intercept[IllegalArgumentException] { Multimodal.pngCodecTag(Array[Byte](1, 2, 3)) }
     intercept[IllegalArgumentException] {
