@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 import graft.ops.Materialize.NarrowSyntax
 
 /** Deduplication operators for document corpora, from exact to near-dup.
@@ -923,6 +924,32 @@ object Dedup {
     * large-star/small-star contraction (O(log n) rounds) —
     * [[connectedComponentsLogRounds]], the deep-diameter complement.
     *
+    * Size gate: below the broadcast threshold the SAME rounds run on the
+    * driver. When `vertices` and `edges` both have an analyzed-plan size
+    * estimate at or under `spark.sql.autoBroadcastJoinThreshold` (≥ 0),
+    * both frames are collected and the synchronous min-label rounds run in
+    * driver memory: a vertex takes the least of its label and its
+    * neighbours' previous-round labels, a neighbour counts only if it is
+    * itself a vertex, null ids never match, a round changes something iff
+    * some `nbr_rep < rep`, and a graph that needs more than `maxIters`
+    * rounds throws the same error. The result is a local frame with the
+    * distributed path's exact schema and one row per input vertex row
+    * (duplicate and null ids kept). The threshold is reused because it is
+    * the size under which Spark itself collects a frame to the driver to
+    * broadcast it; below it, per-round jobs, shuffles and checkpoints cost
+    * far more than the rounds (17 jobs for a 60-edge batch, against the
+    * two collects here). The gate reads the same analyzed-plan stats as
+    * [[Materialize.narrowIfSmall]] and adds no option. The distributed
+    * rounds run when either estimate is over the threshold (Spark's
+    * `defaultSizeInBytes` sentinel under a checkpointed `LogicalRDD`
+    * included), when `checkpointDir` is given (the caller asked for
+    * checkpointed distributed rounds), and when the id, src or dst column
+    * is not integral (`ByteType` to `LongType`): JVM equality and ordering
+    * on floating, string or binary values differ from the join's and
+    * `least`'s. Each call logs its decision at INFO on logger
+    * `graft.ops.Dedup` (both estimates, the threshold, the path, the
+    * rounds run); a log4j2 config that sets that logger to INFO shows it.
+    *
     * Output: `(id, rep)` — `rep` = min id of the component.
     */
   def connectedComponents(
@@ -936,6 +963,103 @@ object Dedup {
       checkpointInterval: Int = 5): DataFrame = {
     require(checkpointInterval >= 1,
       s"checkpointInterval must be >= 1, got $checkpointInterval")
+    val threshold = vertices.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val vEst = vertices.queryExecution.analyzed.stats.sizeInBytes
+    val eEst = edges.queryExecution.analyzed.stats.sizeInBytes
+    val integral = Seq(vertices.select(col(idCol)), edges.select(col(srcCol), col(dstCol)))
+      .flatMap(_.schema.map(_.dataType)).forall {
+        case ByteType | ShortType | IntegerType | LongType => true
+        case _ => false
+      }
+    val onDriver = threshold >= 0 && vEst <= threshold && eEst <= threshold &&
+      checkpointDir.isEmpty && integral
+    val (labels, rounds, done) =
+      if (onDriver) componentsOnDriver(vertices, edges, idCol, srcCol, dstCol, maxIters)
+      else componentsDistributed(vertices, edges, idCol, srcCol, dstCol, maxIters,
+        checkpointDir, checkpointInterval)
+    log.info(s"connectedComponents: vertices est $vEst B, edges est $eEst B, " +
+      s"broadcast threshold $threshold B, checkpointDir ${checkpointDir.isDefined}, " +
+      s"integral ids $integral -> ${if (onDriver) "driver" else "distributed"} path, " +
+      s"$rounds rounds, converged $done")
+    // Silent partial collapse would be indistinguishable from a converged
+    // result — fail loudly instead; the caller raises maxIters (or uses a
+    // log-round contraction algorithm for genuinely deep graphs).
+    if (!done) sys.error(
+      s"connectedComponents did not converge in $maxIters rounds — " +
+        "a component's diameter exceeds maxIters; raise it")
+    labels
+  }
+
+  private lazy val log = org.slf4j.LoggerFactory.getLogger("graft.ops.Dedup")
+
+  /** [[connectedComponents]]' rounds in driver memory, for inputs its size
+    * gate admits (integral ids, broadcast-sized). Ids compare as `Long`,
+    * the widening the distributed join applies to integral types, and every
+    * `rep` is some vertex's id, so it converts back to the id type exactly.
+    * Returns the `(id, rep)` local frame, the rounds run and whether the
+    * last round changed nothing.
+    */
+  private def componentsOnDriver(
+      vertices: DataFrame,
+      edges: DataFrame,
+      idCol: String,
+      srcCol: String,
+      dstCol: String,
+      maxIters: Int): (DataFrame, Int, Boolean) = {
+    import scala.jdk.CollectionConverters._
+    // The distributed path's output schema, from an unexecuted projection:
+    // `least` is nullable iff its operands are, as in the round's select.
+    val v = vertices.select(col(idCol).as("id"))
+    val schema = v.select(col("id"), least(col("id"), col("id")).as("rep")).schema
+    def asLong(x: Any): Option[Long] = Option(x).map(_.asInstanceOf[Number].longValue)
+    val ids = v.collect().map(_.get(0))
+    val index = scala.collection.mutable.HashMap.empty[Long, Int]
+    ids.flatMap(asLong).foreach(id => if (!index.contains(id)) index(id) = index.size)
+    val rep = new Array[Long](index.size)
+    index.foreach { case (id, i) => rep(i) = id }
+    // Undirected adjacency between vertices only: an endpoint that is null
+    // or not a vertex matches no label row in the join, so it adds nothing.
+    val adj = Array.fill(index.size)(List.empty[Int])
+    edges.select(col(srcCol), col(dstCol)).collect().foreach { r =>
+      for (s <- asLong(r.get(0)).flatMap(index.get); d <- asLong(r.get(1)).flatMap(index.get)) {
+        adj(s) = d :: adj(s)
+        adj(d) = s :: adj(d)
+      }
+    }
+    var rounds = 0
+    var done = false
+    while (!done && rounds < maxIters) {
+      val prev = rep.clone()
+      var changed = false
+      for (i <- rep.indices; j <- adj(i) if prev(j) < rep(i)) {
+        rep(i) = prev(j)
+        changed = true
+      }
+      done = !changed
+      rounds += 1
+    }
+    val fromLong: Long => Any = schema("rep").dataType match {
+      case ByteType => _.toByte
+      case ShortType => _.toShort
+      case IntegerType => _.toInt
+      case _ => identity
+    }
+    val rows = ids.map(id => Row(id, asLong(id).map(l => fromLong(rep(index(l)))).orNull))
+    (vertices.sparkSession.createDataFrame(rows.toSeq.asJava, schema), rounds, done)
+  }
+
+  /** [[connectedComponents]]' distributed rounds; returns the labels, the
+    * rounds run and whether the last round changed nothing.
+    */
+  private def componentsDistributed(
+      vertices: DataFrame,
+      edges: DataFrame,
+      idCol: String,
+      srcCol: String,
+      dstCol: String,
+      maxIters: Int,
+      checkpointDir: Option[String],
+      checkpointInterval: Int): (DataFrame, Int, Boolean) = {
     checkpointDir.foreach { dir =>
       val sc = vertices.sparkSession.sparkContext
       // Respect a caller-configured session-level checkpoint dir: setting it
@@ -990,13 +1114,7 @@ object Dedup {
       done = changed == 0L
       iter += 1
     }
-    // Silent partial collapse would be indistinguishable from a converged
-    // result — fail loudly instead; the caller raises maxIters (or uses a
-    // log-round contraction algorithm for genuinely deep graphs).
-    if (!done) sys.error(
-      s"connectedComponents did not converge in $maxIters rounds — " +
-        "a component's diameter exceeds maxIters; raise it")
-    labels.drop("__chg")
+    (labels.drop("__chg"), iter, done)
   }
 
   /** Connected components by alternating large-star / small-star edge

@@ -95,46 +95,62 @@ object Layout {
     * else the first data file by path), converted by Spark's own converter
     * under the session conf and preferring the Spark row metadata a Spark
     * writer stored — exactly `ParquetFileFormat.readSchemaFromFooter` — so
-    * type rules stay Spark's. On a `partitionBy` table the footer holds the
-    * data columns only; the reader infers the partition columns from the
-    * directory names as before and appends them after the data columns.
-    * The schema is read on every call and never cached: a table rewritten
-    * in place under the same path is read with its new schema. A missing or
+    * type rules stay Spark's. The relation is built over the listing that
+    * picked the footer, so the path is listed once, not again by the
+    * reader; it is the relation `spark.read.schema(footer).parquet(path)`
+    * resolves to: the reader's partition columns, inferred from the
+    * directory names, follow the (nullable) footer columns. A root whose
+    * own name starts with `_` (a zone-map manifest) is listed like any
+    * other, where the reader would warn that it ignores the path. The
+    * schema is read on every call and never cached: a table rewritten in
+    * place under the same path is read with its new schema. A missing or
     * empty path falls through to Spark's own inference, which fails loud
     * exactly as before.
     */
   private[graft] def readParquet(
-      spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    footerSchema(spark, path)
-      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
-
-  private def footerSchema(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[org.apache.spark.sql.types.StructType] = {
+      spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
     import org.apache.hadoop.fs.Path
     import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
     import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
     import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex}
     import org.apache.spark.sql.execution.datasources.parquet._
-    val root = new Path(path)
+    import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
     val conf = spark.sessionState.newHadoopConf()
-    if (!root.getFileSystem(conf).exists(root)) None
-    else {
-      // The listing the reader itself does (hidden-file and partition rules).
-      val leaves = new InMemoryFileIndex(spark, Seq(root), Map.empty, None)
-        .allFiles().sortBy(_.getPath.toString)
-      val summaries = Seq(
-        ParquetFileWriter.PARQUET_COMMON_METADATA_FILE, ParquetFileWriter.PARQUET_METADATA_FILE)
-      summaries.flatMap(n => leaves.find(_.getPath.getName == n)).headOption
-        .orElse(leaves.find(f => !summaries.contains(f.getPath.getName)))
-        .map { f =>
-          val footer = ParquetFooterReader.readFooter(
-            HadoopInputFile.fromStatus(f, conf), SKIP_ROW_GROUPS)
-          ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
-            new ParquetToSparkSchemaConverter(spark.sessionState.conf))
-        }
-    }
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val relation =
+      if (!fs.exists(root)) None
+      else {
+        // The listing the reader itself does (hidden-file and partition rules).
+        val index = new InMemoryFileIndex(spark, Seq(fs.makeQualified(root)), Map.empty, None)
+        val leaves = index.allFiles().sortBy(_.getPath.toString)
+        val summaries = Seq(
+          ParquetFileWriter.PARQUET_COMMON_METADATA_FILE, ParquetFileWriter.PARQUET_METADATA_FILE)
+        summaries.flatMap(n => leaves.find(_.getPath.getName == n)).headOption
+          .orElse(leaves.find(f => !summaries.contains(f.getPath.getName)))
+          .map { f =>
+            val footer = ParquetFooterReader.readFooter(
+              HadoopInputFile.fromStatus(f, conf), SKIP_ROW_GROUPS)
+            val schema = ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
+              new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+            val resolver = spark.sessionState.conf.resolver
+            val parts = index.partitionSchema
+            // Spark's private `asNullable`, which the reader applies to
+            // a given data schema.
+            def nullable(t: DataType): DataType = t match {
+              case s: StructType => StructType(s.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+              case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+              case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+              case other => other
+            }
+            HadoopFsRelation(index, parts,
+              nullable(StructType(schema.filterNot(c => parts.exists(p => resolver(p.name, c.name)))))
+                .asInstanceOf[StructType],
+              None, new ParquetFileFormat, Map.empty)(spark)
+          }
+      }
+    relation.fold(spark.read.parquet(path))(spark.baseRelationToDataFrame)
   }
 
   // ---------------------------------------------------------------- zone maps
@@ -368,7 +384,7 @@ object Layout {
         "rename back (complete pre-patch manifest) or delete it, or re-run statsManifest")
     val e = bumpTableEpoch(spark, tablePath)
     if (!fs.exists(mdir)) return
-    val manifest = spark.read.parquet(mdir.toString)
+    val manifest = readParquet(spark, mdir.toString)
     val cols = manifest.columns.filter(_.startsWith("min_")).map(_.stripPrefix("min_")).toSeq
     require(cols.nonEmpty, s"manifest at $mdir has no min_/max_ columns")
     // Bloom family parameters ride in the manifest rows themselves
@@ -441,7 +457,7 @@ object Layout {
     require(te.isDefined && me == te,
       s"manifest fsck failed for $tablePath: manifest epoch ${me.getOrElse("absent")} " +
         s"vs table epoch ${te.getOrElse("absent")}")
-    val mfiles = spark.read.parquet(s"$tablePath/$ManifestDir")
+    val mfiles = readParquet(spark, s"$tablePath/$ManifestDir")
       .select("file").collect().map(r => norm(r.getString(0))).toSet
     def walk(p: Path): Seq[Path] = {
       fs.listStatus(p).flatMap { s =>
@@ -501,7 +517,7 @@ object Layout {
     val zoneCond = bounds.map { case (c, (lo, hi)) =>
       col(s"max_$c") >= lit(lo) && col(s"min_$c") <= lit(hi)
     }.reduce(_ && _)
-    val keep = spark.read.parquet(s"$tablePath/$ManifestDir")
+    val keep = readParquet(spark, s"$tablePath/$ManifestDir")
       .filter(zoneCond)
       .select("file").collect().map(_.getString(0))
     val exact = bounds.map { case (c, (lo, hi)) =>
@@ -553,7 +569,7 @@ object Layout {
       c: String,
       value: Column): DataFrame = {
     requireFreshManifest(spark, tablePath)
-    val manifest = spark.read.parquet(s"$tablePath/$ManifestDir")
+    val manifest = readParquet(spark, s"$tablePath/$ManifestDir")
     require(manifest.columns.contains(s"bloom_$c"),
       s"manifest for $tablePath has no Bloom filter on '$c' — re-run " +
         s"statsManifest with bloomCols including '$c'")
@@ -696,7 +712,7 @@ object Layout {
     val manifestP = new Path(table, ManifestDir)
     val manifestCols: Seq[String] =
       if (fs.exists(manifestP))
-        spark.read.parquet(manifestP.toString).columns
+        readParquet(spark, manifestP.toString).columns
           .filter(_.startsWith("min_")).map(_.stripPrefix("min_")).toSeq
       else Seq.empty
     val live = readParquet(spark, tablePath)

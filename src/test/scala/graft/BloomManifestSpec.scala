@@ -11,9 +11,6 @@ import org.apache.spark.sql.functions._
 class BloomManifestSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmpDir(): String =
-    java.nio.file.Files.createTempDirectory("graft-bloom-spec").toString
-
   // A user-clustered table probed by event id: ids are assigned pseudo-
   // randomly w.r.t. users, so every file's [min_id, max_id] zone spans
   // nearly the whole domain — the bitmap is the only working pruner.
@@ -26,7 +23,7 @@ class BloomManifestSpec extends SparkSpec {
   }
 
   test("point lookup equals the full-scan equality filter") {
-    val dir = tmpDir()
+    val dir = tmpDir("graft-bloom-spec")
     mkTable(dir, 2000)
     graft.ops.Layout.statsManifest(spark, s"$dir/t",
       Seq("user_id", "id"), bloomCols = Seq("id"), bloomBits = 1 << 13)
@@ -41,7 +38,7 @@ class BloomManifestSpec extends SparkSpec {
   }
 
   test("the probe reads only the files whose bitmap claims the value") {
-    val dir = tmpDir()
+    val dir = tmpDir("graft-bloom-spec")
     mkTable(dir, 2000)
     // Zone-map only user_id: id zones are absent, so any pruning observed
     // can ONLY come from the bitmap.
@@ -58,7 +55,7 @@ class BloomManifestSpec extends SparkSpec {
   }
 
   test("upsert + manifest patch rebuilds the patched files' bitmaps") {
-    val dir = tmpDir()
+    val dir = tmpDir("graft-bloom-spec")
     val df = (0 until 400).map { i =>
       (i.toLong, s"p${i % 4}", s"v$i")
     }.toDF("id", "ptype", "payload")
@@ -80,7 +77,7 @@ class BloomManifestSpec extends SparkSpec {
   }
 
   test("an out-of-band write makes the point read fail loud") {
-    val dir = tmpDir()
+    val dir = tmpDir("graft-bloom-spec")
     mkTable(dir, 500)
     graft.ops.Layout.statsManifest(spark, s"$dir/t",
       Seq("user_id"), bloomCols = Seq("id"), bloomBits = 1 << 13)
@@ -94,7 +91,7 @@ class BloomManifestSpec extends SparkSpec {
   }
 
   test("a NULL probe and a bloom-less column fail loud") {
-    val dir = tmpDir()
+    val dir = tmpDir("graft-bloom-spec")
     mkTable(dir, 100)
     graft.ops.Layout.statsManifest(spark, s"$dir/t",
       Seq("user_id"), bloomCols = Seq("id"), bloomBits = 1 << 13)

@@ -1,11 +1,45 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for specs. */
-trait SparkSpec extends AnyFunSuite {
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
+
+  private val tmpDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]
+
+  /** A fresh directory under `java.io.tmpdir` whose name starts with
+    * `prefix`; it and everything in it are deleted after the suite.
+    */
+  def tmpDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    tmpDirs.add(d)
+    d.toString
+  }
+
+  /** `f` with the given session confs set, each restored afterwards. */
+  def withSqlConf[T](pairs: (String, String)*)(f: => T): T = {
+    val conf = spark.conf
+    val olds = pairs.map { case (k, _) => k -> conf.getOption(k) }
+    pairs.foreach { case (k, v) => conf.set(k, v) }
+    try f
+    finally olds.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+  }
+
+  override def afterAll(): Unit =
+    try if (!tmpDirs.isEmpty) {
+      // A session checkpoint dir set inside one of them would outlive the
+      // delete: later suites' checkpoints would recreate it.
+      val sc = spark.sparkContext
+      if (sc.getCheckpointDir.exists(c => tmpDirs.stream.anyMatch(d => c.contains(d.toString))))
+        sc.setCheckpointDir(null)
+      tmpDirs.forEach(d => SparkEntry.deleteTree(d))
+    } finally super.afterAll()
 
   /** `body`'s result and the number of Spark jobs it started — the count
     * job budgets are pinned in (the same on every host, unlike timings).

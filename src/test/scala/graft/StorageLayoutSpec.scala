@@ -11,9 +11,6 @@ import org.apache.spark.sql.functions._
 class StorageLayoutSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmpDir(): String =
-    java.nio.file.Files.createTempDirectory("graft-layout").toString
-
   private def walk(root: String): Seq[java.io.File] = {
     def go(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) Option(f.listFiles).toSeq.flatten.flatMap(go) else Seq(f)
@@ -23,7 +20,7 @@ class StorageLayoutSpec extends SparkSpec {
     walk(root).map(_.getPath).filter(_.endsWith(".parquet"))
 
   test("bucketed tables join without a shuffle exchange on either side") {
-    val dir = tmpDir()
+    val dir = tmpDir("graft-layout")
     val left = (0L until 1000L).map(i => (i % 100, i)).toDF("k", "v")
     val right = (0L until 300L).map(i => (i % 100, s"r$i")).toDF("rk", "name")
     left.write.bucketBy(8, "k").sortBy("k")
@@ -50,7 +47,7 @@ class StorageLayoutSpec extends SparkSpec {
   }
 
   test("persisted IVF probe prunes to the probed cluster partitions and matches ivfTopK") {
-    val dir = tmpDir()
+    val dir = tmpDir("graft-layout")
     // Four well-separated direction clusters in 3-d (labels 0..3), with
     // per-vector jitter so in-cluster cosines are distinct. vec 0 is the
     // query.
@@ -102,7 +99,7 @@ class StorageLayoutSpec extends SparkSpec {
   }
 
   test("minhash index probe prunes to the batch's (band, bucket) partitions") {
-    val dir = tmpDir()
+    val dir = tmpDir("graft-layout")
     // 40 distinct docs; doc 7 gets a near-identical twin (id 100) planted
     // in the incoming batch, alongside a fresh doc (id 101) matching
     // nothing.
@@ -151,7 +148,7 @@ class StorageLayoutSpec extends SparkSpec {
   }
 
   test("minhash index append: probe finds the appended doc, touches only batch partitions") {
-    val dir = tmpDir()
+    val dir = tmpDir("graft-layout")
     val mk = (i: Long) =>
       s"alpha bravo charlie delta echo foxtrot golf hotel doc$i marker$i tail$i"
     val corpus = (0L until 40L).map(i => (i, mk(i))).toDF("doc_id", "text")
@@ -196,7 +193,7 @@ class StorageLayoutSpec extends SparkSpec {
   }
 
   test("ivf append: probe finds appended vectors, assigned to frozen centroids only") {
-    val dir = tmpDir()
+    val dir = tmpDir("graft-layout")
     val bases = Seq(
       Array(1.0, 0.05, 0.0), Array(0.0, 1.0, 0.05),
       Array(0.05, 0.0, 1.0), Array(0.6, 0.6, 0.2))
@@ -234,7 +231,7 @@ class StorageLayoutSpec extends SparkSpec {
   }
 
   test("ivf recluster: appended new-label region gets its own cluster, probes route to it") {
-    val dir = tmpDir()
+    val dir = tmpDir("graft-layout")
     val bases = Seq(
       Array(1.0, 0.05, 0.0), Array(0.0, 1.0, 0.05),
       Array(0.05, 0.0, 1.0), Array(0.6, 0.6, 0.2))
@@ -280,7 +277,7 @@ class StorageLayoutSpec extends SparkSpec {
   }
 
   test("zone-map pruned read scans fewer files, answers exactly, and stale manifests fail loud") {
-    val dir = tmpDir()
+    val dir = tmpDir("graft-layout")
     val rows = (0L until 300L).map(i => (i, i * 10L, s"v$i")).toDF("id", "t", "v")
     rows.repartitionByRange(5, col("t")).write.mode("overwrite").parquet(s"$dir/t")
     graft.ops.Layout.statsManifest(spark, s"$dir/t", Seq("t"))
@@ -314,8 +311,31 @@ class StorageLayoutSpec extends SparkSpec {
     assert(again == (expected :+ 999L).sorted)
   }
 
+  test("zone-map manifest opens start no job; the pruned read answers as before") {
+    val dir = tmpDir("graft-layout")
+    val rows = (0L until 300L).map(i => (i, i * 10L, s"v$i")).toDF("id", "t", "v")
+    rows.repartitionByRange(5, col("t")).write.mode("overwrite").parquet(s"$dir/t")
+    graft.ops.Layout.statsManifest(spark, s"$dir/t", Seq("t"))
+    // The manifest root's own name starts with `_`: the helper still lists
+    // its files and reads the schema Spark's inference reads.
+    val m = s"$dir/t/_graft_manifest"
+    val (manifest, openJobs) = jobsOf(graft.ops.Layout.readParquet(spark, m))
+    assert(openJobs == 0, s"manifest open started $openJobs job(s)")
+    assert(manifest.schema == spark.read.parquet(m).schema, manifest.schema)
+    assert(manifest.inputFiles.nonEmpty &&
+      manifest.inputFiles.toSet == spark.read.parquet(m).inputFiles.toSet)
+    assert(manifest.count() == 5L)
+    // Planning a pruned read: the surviving-file collect and the file-list
+    // read's schema inference, nothing for the manifest.
+    val (pruned, planJobs) = jobsOf(graft.ops.Layout.prunedParquet(spark, s"$dir/t", "t", 500L, 700L))
+    assert(planJobs == 2, s"pruned read planning started $planJobs job(s)")
+    val expected = rows.filter(col("t") >= 500L && col("t") <= 700L).collect().map(_.toString).sorted
+    assert(pruned.collect().map(_.toString).sorted.toSeq == expected.toSeq && expected.nonEmpty)
+    graft.ops.Layout.verifyManifest(spark, s"$dir/t")
+  }
+
   test("2-D zone pruning on a z-clustered table beats either single-column bound") {
-    val dir = tmpDir()
+    val dir = tmpDir("graft-layout")
     // 32×32 grid, one row per (x, y): z-clustered files are rectangles.
     val rows = (0L until 1024L).map(i => (i, i % 32, i / 32)).toDF("id", "x", "y")
     graft.ops.Layout.clusterByZ(rows, "x", "y", bits = 5, numPartitions = 16)
@@ -339,7 +359,7 @@ class StorageLayoutSpec extends SparkSpec {
   }
 
   test("manifest fsck catches the out-of-band write the fast epoch check cannot see") {
-    val dir = tmpDir()
+    val dir = tmpDir("graft-layout")
     val rows = (0L until 100L).map(i => (i, i * 10L)).toDF("id", "t")
     rows.repartitionByRange(4, col("t")).write.mode("overwrite").parquet(s"$dir/t")
     graft.ops.Layout.statsManifest(spark, s"$dir/t", Seq("t"))
@@ -358,7 +378,7 @@ class StorageLayoutSpec extends SparkSpec {
   }
 
   test("upsert and compaction keep the zone-map manifest fresh via the epoch protocol") {
-    val dir = tmpDir()
+    val dir = tmpDir("graft-layout")
     val base = (0L until 120L).map(i => (i, i * 10L, s"p${(i % 3).toInt}"))
       .toDF("id", "t", "part")
     base.write.mode("overwrite").partitionBy("part").parquet(s"$dir/t")
@@ -386,7 +406,7 @@ class StorageLayoutSpec extends SparkSpec {
   }
 
   test("manifest patch with a nested-partition ancestor dir replaces descendants, no duplicates") {
-    val dir = tmpDir()
+    val dir = tmpDir("graft-layout")
     val rows = (0L until 80L).map(i =>
       (i, i * 10L, (i % 2).toInt, (i % 4).toInt)).toDF("id", "t", "band", "bucket")
     rows.write.mode("overwrite").partitionBy("band", "bucket").parquet(s"$dir/t")
@@ -433,7 +453,7 @@ class StorageLayoutSpec extends SparkSpec {
   }
 
   test("partitioned upsert: COW touches only the batch's partitions, keys replaced not duplicated") {
-    val dir = tmpDir()
+    val dir = tmpDir("graft-layout")
     val base = (0L until 30L).map(i => (i, s"v$i", s"p${i % 3}"))
       .toDF("id", "v", "part")
     base.write.mode("overwrite").partitionBy("part").parquet(s"$dir/t")
@@ -469,7 +489,7 @@ class StorageLayoutSpec extends SparkSpec {
   }
 
   test("index compaction folds append files to one per partition, probes unchanged") {
-    val dir = tmpDir()
+    val dir = tmpDir("graft-layout")
     val mk = (i: Long) =>
       s"alpha bravo charlie delta echo foxtrot golf hotel doc$i marker$i tail$i"
     val corpus = (0L until 30L).map(i => (i, mk(i))).toDF("doc_id", "text")
@@ -504,7 +524,7 @@ class StorageLayoutSpec extends SparkSpec {
   }
 
   test("minhash rebuild at the same path drops the old append delta") {
-    val dir = tmpDir()
+    val dir = tmpDir("graft-layout")
     val mk = (i: Long) =>
       s"alpha bravo charlie delta echo foxtrot golf hotel doc$i marker$i tail$i"
     val corpus = (0L until 20L).map(i => (i, mk(i))).toDF("doc_id", "text")
@@ -522,7 +542,7 @@ class StorageLayoutSpec extends SparkSpec {
   }
 
   test("minhash probe over base and delta sharing rows answers as the base alone") {
-    val dir = tmpDir()
+    val dir = tmpDir("graft-layout")
     val mk = (i: Long) =>
       s"alpha bravo charlie delta echo foxtrot golf hotel doc$i marker$i tail$i"
     val corpus = (0L until 20L).map(i => (i, mk(i))).toDF("doc_id", "text")
@@ -547,7 +567,7 @@ class StorageLayoutSpec extends SparkSpec {
   }
 
   test("a one-partition minhash append writes 2 data files; index opens start no job") {
-    val dir = tmpDir()
+    val dir = tmpDir("graft-layout")
     val mk = (i: Long) =>
       s"alpha bravo charlie delta echo foxtrot golf hotel doc$i marker$i tail$i"
     graft.ops.Dedup.minhashIndexBuild(
@@ -570,7 +590,7 @@ class StorageLayoutSpec extends SparkSpec {
 
   test("footer-schema open of the partitioned signatures equals Spark's inference") {
     import org.apache.spark.sql.types._
-    val dir = tmpDir()
+    val dir = tmpDir("graft-layout")
     val corpus = (0L until 20L).map(i => (i, s"some words for document number $i here"))
       .toDF("doc_id", "text")
     graft.ops.Dedup.minhashIndexBuild(corpus, s"$dir/idx", n = 3)
@@ -586,7 +606,7 @@ class StorageLayoutSpec extends SparkSpec {
   }
 
   test("minhash manifest read fails loud and names the path") {
-    val dir = tmpDir()
+    val dir = tmpDir("graft-layout")
     val corpus = (0L until 10L)
       .map(i => (i, s"some words for document number $i here")).toDF("doc_id", "text")
     graft.ops.Dedup.minhashIndexBuild(corpus, s"$dir/idx", n = 3)
@@ -608,7 +628,7 @@ class StorageLayoutSpec extends SparkSpec {
   }
 
   test("minhash probe and append fail loud on a signature-family mismatch") {
-    val dir = tmpDir()
+    val dir = tmpDir("graft-layout")
     val corpus = (0L until 10L)
       .map(i => (i, s"some words for document number $i here")).toDF("doc_id", "text")
     graft.ops.Dedup.minhashIndexBuild(corpus, s"$dir/idx", n = 3, numHashes = 32, bands = 8)
@@ -629,7 +649,7 @@ class StorageLayoutSpec extends SparkSpec {
   }
 
   test("date-partitioned parquet prunes partitions at the scan") {
-    val dir = tmpDir()
+    val dir = tmpDir("graft-layout")
     val events = (0L until 500L)
       .map(i => (i % 10, i, s"e$i")).toDF("day", "event_id", "payload")
     events.write.partitionBy("day").parquet(s"$dir/events")

@@ -12,9 +12,6 @@ import org.apache.spark.sql.functions._
 class InvertedSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmpDir(): String =
-    java.nio.file.Files.createTempDirectory("graft-inv-spec").toString
-
   private def mkDocs(ids: Range) =
     ids.map { i =>
       val extra = if (i % 3 == 0) " spark join" else if (i % 3 == 1) " spark" else ""
@@ -33,7 +30,7 @@ class InvertedSpec extends SparkSpec {
 
   test("search equals the brute-force corpus computation") {
     val docs = mkDocs(0 until 200)
-    val path = tmpDir()
+    val path = tmpDir("graft-inv-spec")
     Inverted.build(docs, path, nBuckets = 8)
     val got = Inverted.search(spark, path, Seq("spark", "join"), 15)
       .collect().map(_.toSeq).toSeq
@@ -47,7 +44,7 @@ class InvertedSpec extends SparkSpec {
 
   test("a probe reads only the buckets its terms hash to") {
     val docs = mkDocs(0 until 200)
-    val path = tmpDir()
+    val path = tmpDir("graft-inv-spec")
     Inverted.build(docs, path, nBuckets = 16)
     val probed = Inverted.search(spark, path, Seq("spark"), 5)
     val root = probed.queryExecution.executedPlan match {
@@ -71,14 +68,14 @@ class InvertedSpec extends SparkSpec {
 
   test("an unknown term empties a conjunctive query") {
     val docs = mkDocs(0 until 50)
-    val path = tmpDir()
+    val path = tmpDir("graft-inv-spec")
     Inverted.build(docs, path, nBuckets = 8)
     assert(Inverted.search(spark, path, Seq("spark", "zzz_absent"), 5).isEmpty)
   }
 
   test("appended docs are visible without a rebuild") {
     val docs = mkDocs(0 until 200)
-    val path = tmpDir()
+    val path = tmpDir("graft-inv-spec")
     Inverted.build(docs.filter(col("doc_id") % 2 === 0), path, nBuckets = 8)
     Inverted.append(docs.filter(col("doc_id") % 2 === 1), path)
     val got = Inverted.search(spark, path, Seq("spark", "join"), 15)
@@ -89,7 +86,7 @@ class InvertedSpec extends SparkSpec {
 
   test("termStats reads df and total tf off the index") {
     val docs = mkDocs(0 until 100)
-    val path = tmpDir()
+    val path = tmpDir("graft-inv-spec")
     Inverted.build(docs, path, nBuckets = 8)
     val got = Inverted.termStats(spark, path, Seq("spark", "common"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq

@@ -12,9 +12,6 @@ import org.apache.spark.sql.functions._
 class IvmSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmpDir(): String =
-    java.nio.file.Files.createTempDirectory("graft-ivm-spec").toString
-
   // (day, type, value) events: 4 days × 3 types, values distinct per row so
   // min/max/sum all discriminate.
   private def mkEvents(ids: Range) =
@@ -30,11 +27,11 @@ class IvmSpec extends SparkSpec {
     val base = all.filter(col("event_id") % 5 =!= 0)
     val b1 = all.filter(col("event_id") % 10 === 0)
     val b2 = all.filter(col("event_id") % 10 === 5)
-    val incr = tmpDir() + "/r"
+    val incr = tmpDir("graft-ivm-spec") + "/r"
     Ivm.buildRollup(spark, base, incr, "day", Seq("event_type"), "value")
     Ivm.applyDelta(spark, incr, b1, "day", Seq("event_type"), "value")
     Ivm.applyDelta(spark, incr, b2, "day", Seq("event_type"), "value")
-    val full = tmpDir() + "/r"
+    val full = tmpDir("graft-ivm-spec") + "/r"
     Ivm.buildRollup(spark, all, full, "day", Seq("event_type"), "value")
     assert(canon(Ivm.readAgg(spark, incr, "day", Seq("event_type"))) ==
       canon(Ivm.readAgg(spark, full, "day", Seq("event_type"))))
@@ -47,7 +44,7 @@ class IvmSpec extends SparkSpec {
   }
 
   test("a delta opens new groups and new partitions") {
-    val path = tmpDir() + "/r"
+    val path = tmpDir("graft-ivm-spec") + "/r"
     Ivm.buildRollup(spark, mkEvents(0 until 100), path,
       "day", Seq("event_type"), "value")
     val batch = Seq(
@@ -63,7 +60,7 @@ class IvmSpec extends SparkSpec {
   }
 
   test("maintenance rewrites only the touched day partitions") {
-    val path = tmpDir() + "/r"
+    val path = tmpDir("graft-ivm-spec") + "/r"
     Ivm.buildRollup(spark, mkEvents(0 until 100), path,
       "day", Seq("event_type"), "value")
     def files(day: Long): Set[String] = {
@@ -86,7 +83,7 @@ class IvmSpec extends SparkSpec {
   }
 
   test("ledger-guarded apply skips a replayed batch id") {
-    val path = tmpDir() + "/r"
+    val path = tmpDir("graft-ivm-spec") + "/r"
     Ivm.buildRollup(spark, mkEvents(0 until 40), path,
       "day", Seq("event_type"), "value")
     val batch = Seq((900L, 1L, "t2", 1.0)).toDF(
@@ -104,7 +101,7 @@ class IvmSpec extends SparkSpec {
   }
 
   test("streaming maintenance equals the from-scratch rebuild") {
-    val dir = tmpDir()
+    val dir = tmpDir("graft-ivm-spec")
     val all = mkEvents(0 until 200)
     Ivm.buildRollup(spark, all.filter(col("event_id") % 2 === 0),
       s"$dir/r", "day", Seq("event_type"), "value")
@@ -117,7 +114,7 @@ class IvmSpec extends SparkSpec {
     q.awaitTermination()
     // One ledger entry per file-sized micro-batch landed.
     assert(new java.io.File(s"$dir/r/_ivm_last_batch").exists)
-    val full = tmpDir() + "/r"
+    val full = tmpDir("graft-ivm-spec") + "/r"
     Ivm.buildRollup(spark, all, full, "day", Seq("event_type"), "value")
     assert(canon(Ivm.readAgg(spark, s"$dir/r", "day", Seq("event_type"))) ==
       canon(Ivm.readAgg(spark, full, "day", Seq("event_type"))))
@@ -133,7 +130,7 @@ class IvmSpec extends SparkSpec {
   }
 
   test("additive semantics: replaying a batch counts it twice") {
-    val path = tmpDir() + "/r"
+    val path = tmpDir("graft-ivm-spec") + "/r"
     Ivm.buildRollup(spark, mkEvents(0 until 40), path,
       "day", Seq("event_type"), "value")
     val batch = Seq((900L, 1L, "t2", 1.0)).toDF(

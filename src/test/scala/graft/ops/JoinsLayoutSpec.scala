@@ -93,7 +93,7 @@ class JoinsLayoutSpec extends SparkSpec {
   ).toDF("user_id", "event_type", "time")
 
   test("bucketedWrite: equal-bucket join plans NO exchange, answers match the plain join") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bkt-spec-").toString
+    val dir = tmpDir("graft-bkt-spec-")
     val facts = (0 until 300).map(i => (i.toLong % 50, s"f$i")).toDF("fk", "fval")
     val dims = (0 until 50).map(i => (i.toLong, s"d$i")).toDF("dk", "dval")
     Layout.bucketedWrite(facts, "bkt_spec_facts", s"$dir/f", "fk", nBuckets = 4)
@@ -124,17 +124,6 @@ class JoinsLayoutSpec extends SparkSpec {
         .queryExecution.executedPlan.toString
     }
     assert(point.contains("SelectedBucketsCount: 1 out of 4"), point.take(1500))
-  }
-
-  private def withSqlConf[T](pairs: (String, String)*)(f: => T): T = {
-    val conf = spark.conf
-    val olds = pairs.map { case (k, _) => k -> conf.getOption(k) }
-    pairs.foreach { case (k, v) => conf.set(k, v) }
-    try f
-    finally olds.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None) => conf.unset(k)
-    }
   }
 
   test("rangeJoin equals the naive theta join: negatives, boundaries, inverted intervals") {
@@ -194,7 +183,7 @@ class JoinsLayoutSpec extends SparkSpec {
   }
 
   test("stepsOneScan reads the event files once; the join chain once per step") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-funnel").toString
+    val dir = tmpDir("graft-funnel")
     funnelEvents.write.parquet(s"$dir/events")
     val ev = spark.read.parquet(s"$dir/events")
     def fileScans(df: org.apache.spark.sql.DataFrame): Int = {

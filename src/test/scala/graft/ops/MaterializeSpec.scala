@@ -63,7 +63,7 @@ class MaterializeSpec extends SparkSpec {
     def run() = Similarity.knnGraph(vecs, nClusters = Some(4), rounds = 1, kNeighbors = 2)
       .collect().map(_.toSeq).toSeq
     val local = withMode("local")(run())
-    val ckptDir = java.nio.file.Files.createTempDirectory("graft-matspec").toString
+    val ckptDir = tmpDir("graft-matspec")
     // The quantizer cache keys on the RESOLVED mode (corpusKey), so this
     // second run re-trains its centroids under reliable mode rather than
     // serving the local run's executor-resident checkpointed frames.

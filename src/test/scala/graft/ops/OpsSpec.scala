@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class OpsSpec extends SparkSpec {
@@ -106,7 +107,7 @@ class OpsSpec extends SparkSpec {
     val base = Seq(
       (1L, "alpha beta gamma delta epsilon"),
       (2L, "zeta eta theta iota kappa")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("ingest").toString
+    val dir = tmpDir("ingest")
     val splits = Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.05)
     Dedup.minhashIndexBuild(base, s"$dir/mh", n = 3)
     Sampling.leakageSafeSplit(base.select(col("doc_id")),
@@ -577,7 +578,7 @@ class OpsSpec extends SparkSpec {
     // Same chain as above, routed through the fault-tolerant cut every 2
     // rounds (the cluster-scale configuration — executor-local blocks don't
     // survive executor loss).
-    val dir = java.nio.file.Files.createTempDirectory("graft_cc_ckpt").toString
+    val dir = tmpDir("graft_cc_ckpt")
     val chain = (0L until 12L).toDF("id")
     val chainEdges = (0L until 11L).map(i => (i, i + 1)).toDF("d1", "d2")
     val out = Dedup.connectedComponents(chain, chainEdges,
@@ -588,6 +589,58 @@ class OpsSpec extends SparkSpec {
     val files = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
       .filter(java.nio.file.Files.isRegularFile(_)).count()
     assert(files > 0, s"no checkpoint files written under $dir")
+  }
+
+  test("connected components: driver rounds equal the distributed rounds, row for row") {
+    def both(vertices: DataFrame, edges: DataFrame): Unit = {
+      def run() = Dedup.connectedComponents(vertices, edges)
+      val (driver, driverJobs) = jobsOf(run())
+      assert(driverJobs <= 2, s"driver path started $driverJobs job(s)")
+      val distributed = withSqlConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(run())
+      assert(driver.schema == distributed.schema, s"${driver.schema} vs ${distributed.schema}")
+      val rows = (df: DataFrame) => df.collect().map(_.toString).sorted.toSeq
+      assert(rows(driver) == rows(distributed))
+    }
+    both(Seq(0L, 1L, 2L, 3L, 4L, 5L).toDF("id"), Seq((0L, 1L), (1L, 2L), (4L, 5L)).toDF("d1", "d2"))
+    val rnd = new scala.util.Random(7)
+    both((0L until 80L).toDF("id"), (1 until 80).flatMap { i =>
+      if (rnd.nextDouble() < 0.7) Some((rnd.nextInt(i).toLong, i.toLong)) else None
+    }.toDF("d1", "d2"))
+    // A vertex id listed twice keeps both rows.
+    both(Seq(0L, 1L, 1L, 2L).toDF("id"), Seq((1L, 2L)).toDF("d1", "d2"))
+    // A null vertex id (and a null endpoint) matches nothing and keeps its row.
+    both(Seq(Some(0L), None, Some(1L), Some(2L)).toDF("id"),
+      Seq((Some(1L), Some(2L)), (None, Some(0L))).toDF("d1", "d2"))
+    // An edge through an id that is not a vertex links nothing.
+    both(Seq(0L, 1L, 2L, 3L).toDF("id"), Seq((0L, 1L), (1L, 99L), (99L, 2L)).toDF("d1", "d2"))
+    both(Seq(0L, 1L, 2L, 3L, 4L).toDF("id"), Seq((3L, 4L)).toDF("d1", "d2"))
+    both(Seq(3, 1, 2, 7).toDF("id"), Seq((1, 3), (2, 3)).toDF("d1", "d2"))
+    // Both paths refuse a component deeper than maxIters.
+    val chain = (0L until 64L).toDF("id")
+    val chainEdges = (0L until 63L).map(i => (i, i + 1)).toDF("d1", "d2")
+    for (t <- Seq("10485760", "-1")) {
+      val err = intercept[RuntimeException] {
+        withSqlConf("spark.sql.autoBroadcastJoinThreshold" -> t) {
+          Dedup.connectedComponents(chain, chainEdges, maxIters = 10)
+        }
+      }
+      assert(err.getMessage.contains("did not converge"), s"threshold $t: ${err.getMessage}")
+    }
+  }
+
+  test("connected components of a 60-edge batch run in at most 2 jobs") {
+    // The benchmark's shape: near-dup pairs collected from a probe, handed
+    // back as a local frame, vertices their distinct endpoints.
+    val edges = (0L until 60L).map(i => (1000L + i, (i * 7L) % 23L)).toDF("new_id", "ref_id")
+    val vertices = edges.select(col("new_id").as("id"))
+      .union(edges.select(col("ref_id").as("id"))).distinct()
+    val (out, jobs) = jobsOf(
+      Dedup.connectedComponents(vertices, edges, srcCol = "new_id", dstCol = "ref_id").collect())
+    assert(jobs <= 2, s"components + collect started $jobs jobs")
+    // Stars around the 23 ref ids: each new id takes its ref as rep.
+    val expected = edges.collect().map(r => (r.getLong(0), r.getLong(1))) ++
+      (0L until 23L).map(r => (r, r))
+    assert(out.length == 83 && out.map(r => (r.getLong(0), r.getLong(1))).toSet == expected.toSet)
   }
 
   test("batch ivf: each query's slice equals the single-query result") {
@@ -834,7 +887,7 @@ class OpsSpec extends SparkSpec {
     // A None probe against an auto-k build inherits the manifest's k.
     val df = (0L until 12L).map(id => (id, Array(1.0f, (id % 3).toFloat)))
       .toDF("vec_id", "embedding")
-    val path = java.nio.file.Files.createTempDirectory("knn-auto").toString
+    val path = tmpDir("knn-auto")
     Similarity.knnGraphBuild(df, path, nClusters = None, rounds = 1, kNeighbors = 2)
     assert(Similarity.knnGraphEdges(spark, path, None, 1, 2).count() > 0)
     intercept[IllegalArgumentException] {
@@ -845,7 +898,7 @@ class OpsSpec extends SparkSpec {
   test("knnGraphAppend: post-append persisted graph ≡ frozen-centroid rebuild of the union") {
     val base = (0L until 12L).map(id => (id, Array(1.0f, (id % 3).toFloat)))
       .toDF("vec_id", "embedding")
-    val path = java.nio.file.Files.createTempDirectory("knn-app").toString
+    val path = tmpDir("knn-app")
     Similarity.knnGraphBuild(base, path, nClusters = Some(3), rounds = 1, kNeighbors = 2)
     val batch = Seq((100L, Array(1.0f, 0.1f)), (101L, Array(1.0f, 2.1f)))
       .toDF("vec_id", "embedding")
@@ -887,7 +940,7 @@ class OpsSpec extends SparkSpec {
   test("knnGraphBuild persists edges; probe fails loud on a config mismatch") {
     val ids = (0L until 12L)
     val df = ids.map(id => (id, Array(1.0f, (id % 3).toFloat))).toDF("vec_id", "embedding")
-    val path = java.nio.file.Files.createTempDirectory("knn-idx").toString
+    val path = tmpDir("knn-idx")
     Similarity.knnGraphBuild(df, path, nClusters = Some(2), rounds = 1, kNeighbors = 2)
     val persisted = Similarity.knnGraphEdges(spark, path, Some(2), 1, 2)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sortBy(x => (x._1, x._2))

@@ -14,9 +14,6 @@ import org.apache.spark.sql.functions._
 class PqPersistedSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmpDir(): String =
-    java.nio.file.Files.createTempDirectory("graft-pq").toString
-
   // 40 vectors in 4-d (m=2 blocks × subDim=2), four direction families with
   // per-vector jitter so ADC sums are distinct and ties never decide a test.
   private val bases = Seq(
@@ -35,7 +32,7 @@ class PqPersistedSpec extends SparkSpec {
     corpusRows(n).head._2.map(_.toDouble).toArray
 
   test("pqProbePersisted matches pqAdcTopK bit-for-bit") {
-    val dir = tmpDir()
+    val dir = tmpDir("graft-pq")
     val df = corpus(40)
     Similarity.pqBuild(df, s"$dir/idx", m = 2, subDim = 2, k = 4)
     val got = Similarity.pqProbePersisted(
@@ -49,7 +46,7 @@ class PqPersistedSpec extends SparkSpec {
   }
 
   test("ivfPqProbePersisted matches ivfPqTopK and prunes to the probed partitions") {
-    val dir = tmpDir()
+    val dir = tmpDir("graft-pq")
     val df = corpus(40)
     Similarity.ivfPqBuild(df, s"$dir/idx", kClusters = 4, rounds = 1,
       m = 2, subDim = 2, kCodes = 4)
@@ -86,7 +83,7 @@ class PqPersistedSpec extends SparkSpec {
   }
 
   test("pqAppend encodes against frozen codebooks; appended twin ranks at its original's ADC") {
-    val dir = tmpDir()
+    val dir = tmpDir("graft-pq")
     val rows = corpusRows(40)
     val df = rows.toDF("vec_id", "embedding")
     Similarity.pqBuild(df.filter(col("vec_id") % 2 === 0), s"$dir/idx",
@@ -117,7 +114,7 @@ class PqPersistedSpec extends SparkSpec {
   }
 
   test("rerank restores the exact ranking ADC cannot produce within a code cell") {
-    val dir = tmpDir()
+    val dir = tmpDir("graft-pq")
     val df = corpus(40)
     Similarity.ivfPqBuild(df, s"$dir/idx", kClusters = 1, rounds = 0,
       m = 2, subDim = 2, kCodes = 4)
@@ -146,7 +143,7 @@ class PqPersistedSpec extends SparkSpec {
   }
 
   test("pqCompact folds append files; probes identical before and after") {
-    val dir = tmpDir()
+    val dir = tmpDir("graft-pq")
     val rows = corpusRows(40)
     Similarity.ivfPqBuild(rows.toDF("vec_id", "embedding"), s"$dir/idx",
       kClusters = 4, rounds = 1, m = 2, subDim = 2, kCodes = 4)
@@ -175,7 +172,7 @@ class PqPersistedSpec extends SparkSpec {
   }
 
   test("pqAppend routes into an IVF+PQ index's frozen-centroid partitions") {
-    val dir = tmpDir()
+    val dir = tmpDir("graft-pq")
     val rows = corpusRows(40)
     val df = rows.toDF("vec_id", "embedding")
     Similarity.ivfPqBuild(df, s"$dir/idx", kClusters = 4, rounds = 1,

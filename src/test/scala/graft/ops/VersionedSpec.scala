@@ -12,16 +12,13 @@ import org.apache.spark.sql.functions._
 class VersionedSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-vtab").toString + "/t"
-
   private def snap(path: String, v: Long): Seq[(Long, String)] =
     Versioned.readVersion(spark, path, v)
       .collect().map(r => (r.getLong(r.fieldIndex("k")), r.getString(r.fieldIndex("s"))))
       .sortBy(_._1).toSeq
 
   test("upsert replaces colliding keys, inserts new ones; old versions stay intact") {
-    val path = tmp()
+    val path = tmpDir("graft-vtab") + "/t"
     // Two files at v1 (repartition(2) by key range) so COW granularity is
     // observable: keys 0-9 in two files.
     val v1df = (0L until 10L).map(k => (k, s"v1-$k")).toDF("k", "s").repartition(2, col("k"))
@@ -40,7 +37,7 @@ class VersionedSpec extends SparkSpec {
   }
 
   test("untouched files are carried by reference, not rewritten") {
-    val path = tmp()
+    val path = tmpDir("graft-vtab") + "/t"
     // Keys hash-split across 4 files; the batch touches ONE key, so at
     // least one v1 file holds no colliding key and must appear verbatim in
     // the v2 manifest.
@@ -63,7 +60,7 @@ class VersionedSpec extends SparkSpec {
   }
 
   test("vacuum drops old versions' manifests and only their unreferenced files") {
-    val path = tmp()
+    val path = tmpDir("graft-vtab") + "/t"
     Versioned.init((0L until 20L).map(k => (k, s"a$k")).toDF("k", "s")
       .repartition(4, col("k")), path)
     Versioned.upsertVersion(Seq((5L, "b5")).toDF("k", "s"), path, Seq("k"))
@@ -86,7 +83,7 @@ class VersionedSpec extends SparkSpec {
   }
 
   test("schema evolution: added columns NULL-backfill carried rows, old versions keep their schema") {
-    val path = tmp()
+    val path = tmpDir("graft-vtab") + "/t"
     Versioned.init((0L until 6L).map(k => (k, s"a$k")).toDF("k", "s")
       .repartition(2, col("k")), path)
     // v2 batch ADDS column q: replaces key 1, inserts key 10.
@@ -117,7 +114,7 @@ class VersionedSpec extends SparkSpec {
   }
 
   test("vacuum removes emptied staging dirs and their sidecar markers") {
-    val path = tmp()
+    val path = tmpDir("graft-vtab") + "/t"
     Versioned.init((0L until 4L).map(k => (k, s"a$k")).toDF("k", "s")
       .coalesce(1), path)
     // Rewrite EVERY v1 file (all keys collide) so v1's staging dir empties.
@@ -138,7 +135,7 @@ class VersionedSpec extends SparkSpec {
   }
 
   test("restore rolls back by reference: no rewrite, the bad version stays readable") {
-    val path = tmp()
+    val path = tmpDir("graft-vtab") + "/t"
     Versioned.init((0L until 6L).map(k => (k, s"a$k")).toDF("k", "s")
       .repartition(2, col("k")), path)
     Versioned.upsertVersion(Seq((1L, "bad"), (99L, "junk")).toDF("k", "s"), path, Seq("k"))
@@ -159,7 +156,7 @@ class VersionedSpec extends SparkSpec {
   }
 
   test("pure-insert batches carry every live file; re-init and bad reads fail loud") {
-    val path = tmp()
+    val path = tmpDir("graft-vtab") + "/t"
     Versioned.init(Seq((1L, "x")).toDF("k", "s"), path)
     Versioned.upsertVersion(Seq((2L, "y")).toDF("k", "s"), path, Seq("k"))
     assert(snap(path, 2L) == Seq((1L, "x"), (2L, "y")))

@@ -421,7 +421,7 @@ class StreamOpsSpec extends SparkSpec {
   }
 
   test("file source to file sink: parquet dir streams through tumbling stats") {
-    val base = java.nio.file.Files.createTempDirectory("graft_stream_").toFile.getAbsolutePath
+    val base = tmpDir("graft_stream_")
     val (in, outDir, ckpt) = (s"$base/in", s"$base/out", s"$base/ckpt")
     import spark.implicits._
     val batch1 = Seq(

@@ -14,7 +14,7 @@ import org.apache.spark.sql.DataFrame
 class JobBudgetSpec extends SparkSpec {
   // A day and a half of events, `ts` stored as TIMESTAMP_NTZ like the corpus.
   private lazy val snap = {
-    val d = java.nio.file.Files.createTempDirectory("graft-jobs").toString
+    val d = tmpDir("graft-jobs")
     TsdbSchemaSpec.events(spark, 2000)
       .withColumn("ts", org.apache.spark.sql.functions.expr("timestamp_micros(ts div 1000)")
         .cast("timestamp_ntz"))

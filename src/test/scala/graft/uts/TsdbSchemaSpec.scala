@@ -17,8 +17,6 @@ class TsdbSchemaSpec extends SparkSpec {
   import org.apache.parquet.hadoop.example.ExampleParquetWriter
   import org.apache.parquet.schema.MessageTypeParser
 
-  private def tmp(): String = java.nio.file.Files.createTempDirectory("graft-schema").toString
-
   /** A parquet file written by plain parquet-mr (no Spark row metadata), with
     * `ts` of the given annotated INT64 type, like the corpus generations.
     */
@@ -45,7 +43,7 @@ class TsdbSchemaSpec extends SparkSpec {
 
   test("schema equals Spark's inference for every stored ts generation") {
     import org.apache.spark.sql.types._
-    val d = tmp()
+    val d = tmpDir("graft-schema")
     // Foreign writers: epoch-ns Long, TIMESTAMP(NANOS), TIMESTAMP_NTZ, TIMESTAMP.
     assert(sameAsInference(foreign(s"$d/long.parquet", "")) == LongType)
     assert(sameAsInference(foreign(s"$d/nanos.parquet", "(TIMESTAMP(NANOS,true))")) == LongType)
@@ -67,7 +65,7 @@ class TsdbSchemaSpec extends SparkSpec {
 
   test("a snapshot rewritten in place is read with its new ts type, never stale") {
     import org.apache.spark.sql.types._
-    val d = tmp()
+    val d = tmpDir("graft-schema")
     val base = TsdbSchemaSpec.events(spark, 20)
     base.write.parquet(s"$d/events.parquet")
     val asLong = Tsdb.events(spark, d)
@@ -81,7 +79,7 @@ class TsdbSchemaSpec extends SparkSpec {
   }
 
   test("a missing or empty path still fails loud") {
-    val d = tmp()
+    val d = tmpDir("graft-schema")
     val missing = intercept[AnalysisException](Tsdb.events(spark, s"$d/nope"))
     assert(missing.getMessage.contains("PATH_NOT_FOUND"), missing.getMessage)
     new java.io.File(s"$d/events.parquet").mkdirs()
