@@ -82,7 +82,7 @@ object Bench {
     * 1.65–1.74× on unchanged code, isolated re-measures ambient —
     * BASELINE.md round-20 row).
     */
-  private val WatchClosely =
+  private[graft] val WatchClosely =
     Set("emb_mean_by_label", "stream_funnel_ordered", "stream_hist_quantiles")
 
   /** Contention signature (the perfdiff bar applied to a query's own reps):

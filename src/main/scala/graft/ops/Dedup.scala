@@ -639,36 +639,16 @@ object Dedup {
       .write.mode("overwrite").json(s"$path/manifest")
   }
 
-  /** Read the signature-family manifest written by [[minhashIndexBuild]]
-    * as (n, numHashes, bands, nBuckets) — on the driver, through the
-    * Hadoop `FileSystem`: the manifest is one JSON line, and reading it
-    * through Spark's JSON source would start two jobs (inference, then
-    * `head`) on every append and every probe. A missing or malformed
-    * manifest fails loud with its path.
+  /** The signature family written by [[minhashIndexBuild]] as
+    * (n, numHashes, bands, nBuckets), read on the driver with no Spark job
+    * ([[Layout.readJsonManifest]]); a missing or malformed manifest fails
+    * loud with its path.
     */
   private[graft] def readMinhashManifest(
       spark: org.apache.spark.sql.SparkSession, path: String): (Int, Int, Int, Int) = {
-    import org.apache.hadoop.fs.Path
-    val dir = new Path(s"$path/manifest")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def bad(why: String) =
-      new IllegalArgumentException(s"MinHash index manifest $dir $why — rebuild the index")
-    if (!fs.exists(dir)) throw bad("does not exist")
-    val lines = fs.listStatus(dir).toSeq
-      .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
-        !f.getPath.getName.startsWith("."))
-      .flatMap { f =>
-        val in = fs.open(f.getPath)
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        finally in.close()
-      }
-      .map(_.trim).filter(_.nonEmpty)
-    if (lines.size != 1) throw bad(s"holds ${lines.size} rows, expected 1")
-    val m = try new com.fasterxml.jackson.databind.ObjectMapper().readTree(lines.head)
-    catch { case e: java.io.IOException => throw bad(s"is not JSON (${e.getMessage})") }
-    def g(c: String): Int = Option(m.get(c)).filter(_.canConvertToInt).map(_.asInt)
-      .getOrElse(throw bad(s"has no integer field `$c`"))
-    (g("n"), g("num_hashes"), g("bands"), g("n_buckets"))
+    val m = Layout.readJsonManifest(
+      spark, s"$path/manifest", "n", "num_hashes", "bands", "n_buckets")
+    (m("n"), m("num_hashes"), m("bands"), m("n_buckets"))
   }
 
   /** The append delta of the index at `path` and its filesystem. */

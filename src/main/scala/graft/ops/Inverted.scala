@@ -26,10 +26,8 @@ import org.apache.spark.sql.functions._
   */
 object Inverted {
 
-  private def readManifest(spark: SparkSession, path: String): Int = {
-    val m = spark.read.json(s"$path/manifest").head()
-    m.getLong(m.fieldIndex("n_buckets")).toInt
-  }
+  private def readManifest(spark: SparkSession, path: String): Int =
+    Layout.readJsonManifest(spark, s"$path/manifest", "n_buckets")("n_buckets")
 
   /** (term, doc_id, tf, bucket) posting rows for a document batch. */
   private def postings(df: DataFrame, nBuckets: Int, idCol: String,

@@ -153,6 +153,40 @@ object Layout {
     relation.fold(spark.read.parquet(path))(spark.baseRelationToDataFrame)
   }
 
+  /** The named integer fields of a one-line JSON index manifest: the
+    * `manifest` directory an index build writes with Spark's JSON writer
+    * (MinHash, inverted index, kNN graph). Read on the driver through the
+    * Hadoop `FileSystem`, because reading it through Spark's JSON source
+    * starts two jobs (inference, then `head`) on every open. A missing,
+    * empty, multi-row or non-JSON manifest, or one without an integer
+    * field asked for, fails with an `IllegalArgumentException` that names
+    * the manifest's path.
+    */
+  private[graft] def readJsonManifest(
+      spark: org.apache.spark.sql.SparkSession, dir: String,
+      fields: String*): Map[String, Int] = {
+    val (fs, p) = fsOf(spark, dir)
+    def bad(why: String) =
+      new IllegalArgumentException(s"index manifest $p $why — rebuild the index")
+    if (!fs.exists(p)) throw bad("does not exist")
+    val lines = fs.listStatus(p).toSeq
+      .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
+        !f.getPath.getName.startsWith("."))
+      .flatMap { f =>
+        val in = fs.open(f.getPath)
+        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
+        finally in.close()
+      }
+      .map(_.trim).filter(_.nonEmpty)
+    if (lines.size != 1) throw bad(s"holds ${lines.size} rows, expected 1")
+    val m = try new com.fasterxml.jackson.databind.ObjectMapper().readTree(lines.head)
+    catch { case e: java.io.IOException => throw bad(s"is not JSON (${e.getMessage})") }
+    fields.map { c =>
+      c -> Option(m.get(c)).filter(_.canConvertToInt).map(_.asInt)
+        .getOrElse(throw bad(s"has no integer field `$c`"))
+    }.toMap
+  }
+
   // ---------------------------------------------------------------- zone maps
 
   private val ManifestDir = "_graft_manifest"

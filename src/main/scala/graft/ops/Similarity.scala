@@ -1104,8 +1104,8 @@ object Similarity {
       idCol: String = "vec_id",
       vecCol: String = "embedding"): Unit = {
     val spark = batch.sparkSession
-    val m = spark.read.json(s"$path/manifest").head()
-    val kNeighbors = m.getLong(m.fieldIndex("k_neighbors")).toInt
+    val kNeighbors =
+      Layout.readJsonManifest(spark, s"$path/manifest", "k_neighbors")("k_neighbors")
     val cents = spark.read.parquet(s"$path/centroids")
     val assignedB = assignClusters(
       batch.select(col(idCol).cast("long").as("vid"),
@@ -1203,8 +1203,8 @@ object Similarity {
       nClusters: Option[Int],
       rounds: Int,
       kNeighbors: Int): DataFrame = {
-    val m = spark.read.json(s"$path/manifest").head()
-    def g(n: String): Long = m.getLong(m.fieldIndex(n))
+    val g = Layout.readJsonManifest(
+      spark, s"$path/manifest", "n_clusters", "rounds", "k_neighbors")
     require(nClusters.forall(g("n_clusters") == _) && g("rounds") == rounds &&
       g("k_neighbors") == kNeighbors,
       s"$path: built with (${g("n_clusters")}, ${g("rounds")}, ${g("k_neighbors")}), " +
@@ -1689,15 +1689,6 @@ object Similarity {
     (bestBits, bestBands, bestProbes)
   }
 
-  /** Candidate-pair count for an SRP plan over `(vec_id, embedding)` —
-    * the audit accessor behind `graft.tools.BandedProbe`: candidates are
-    * private machinery, but their COUNT is the observable n²-cost driver
-    * a capacity plan needs to measure per corpus.
-    */
-  def candidateCount(
-      df: DataFrame, dim: Int, numBits: Int, bands: Int, probes: Int = 0): Long =
-    srpCandidates(df, dim, numBits, bands, "vec_id", "embedding", probes).count()
-
   /** The SRP band candidate relation behind [[srpPairs]] and
     * [[pairsAboveBanded]]: unordered distinct `(v1 < v2)` id pairs whose
     * `numBits`-bit sign signatures agree in at least one of `bands` bands —
@@ -1800,7 +1791,8 @@ object Similarity {
     *   Θ(n²) rows, no candidate scheme can beat brute force, and
     *   [[pairsAbove]] is the right call — this op is the ≥ ~0.9 band.
     *
-    * When to pick which (measured, BandedProbe at the 10× corpus): the
+    * When to pick which (measured at the 10× corpus, BASELINE.md round
+    * 19 and `bench_evidence/r19_banded_recall.json`): the
     * brute kernel's per-pair cost is `dim` codegen'd multiplies (~6 ns at
     * dim 64) while a banded candidate costs join machinery (~100×) a
     * multiply — so the candidate-mass cut must EXCEED that ratio for the
@@ -1823,7 +1815,8 @@ object Similarity {
   /** Corpus-size switch for the default [[pairsAboveBanded]] plan:
     * multiprobe trades a Θ(n·bands·bits-per-band) probe explode for a
     * ~5× cut of the Θ(ff·n²) false-candidate mass, and the measured
-    * constants (BandedProbe, dim 64: probe rows ≈ 0.5 µs, candidate
+    * constants (dim 64, BASELINE.md round 19 and
+    * `bench_evidence/r19_banded_recall.json`: probe rows ≈ 0.5 µs, candidate
     * verify ≈ 0.3 µs) put the break-even near n ≈ 10⁵; below it the
     * explode costs more than it saves, above it the win grows with n.
     * A plan that depends on n must pay for n once (the

@@ -648,6 +648,50 @@ class StorageLayoutSpec extends SparkSpec {
     graft.ops.Dedup.nearDupAgainst(probe, s"$dir/idx", n = 3, threshold = 0.6).collect()
   }
 
+  test("inverted-index and kNN-graph manifests open on the driver without a Spark job") {
+    val dir = tmpDir("graft-layout")
+    graft.ops.Inverted.build(
+      (0L until 8L).map(i => (i, s"alpha bravo doc$i")).toDF("doc_id", "text"),
+      s"$dir/inv", nBuckets = 4)
+    val (inv, invJobs) = jobsOf(
+      graft.ops.Layout.readJsonManifest(spark, s"$dir/inv/manifest", "n_buckets"))
+    assert(inv == Map("n_buckets" -> 4))
+    assert(invJobs == 0, s"inverted manifest read started $invJobs job(s)")
+    // The one job left in planning a search is the term-routing collect;
+    // the manifest adds none.
+    val (_, searchJobs) = jobsOf(graft.ops.Inverted.search(spark, s"$dir/inv", Seq("alpha"), 3))
+    assert(searchJobs == 1, s"planning an inverted search started $searchJobs job(s)")
+    graft.ops.Similarity.knnGraphBuild(
+      (0L until 12L).map(id => (id, Array(1.0f, (id % 3).toFloat))).toDF("vec_id", "embedding"),
+      s"$dir/knn", nClusters = Some(2), rounds = 1, kNeighbors = 2)
+    val (knn, knnJobs) = jobsOf(graft.ops.Layout.readJsonManifest(
+      spark, s"$dir/knn/manifest", "n_clusters", "rounds", "k_neighbors"))
+    assert(knn == Map("n_clusters" -> 2, "rounds" -> 1, "k_neighbors" -> 2))
+    assert(knnJobs == 0, s"kNN-graph manifest read started $knnJobs job(s)")
+    // A probe with the wrong parameters is refused from the manifest alone.
+    val (_, refusedJobs) = jobsOf(intercept[IllegalArgumentException](
+      graft.ops.Similarity.knnGraphEdges(spark, s"$dir/knn", Some(3), 1, 2)))
+    assert(refusedJobs == 0, s"refused kNN probe started $refusedJobs job(s)")
+  }
+
+  test("a corrupted inverted-index manifest fails loud with its path") {
+    val dir = tmpDir("graft-layout")
+    graft.ops.Inverted.build(
+      (0L until 8L).map(i => (i, s"alpha bravo doc$i")).toDF("doc_id", "text"),
+      s"$dir/inv", nBuckets = 4)
+    // Truncate the one non-empty part file; drop the checksum sidecars so
+    // the read reaches the content instead of failing the checksum first.
+    val (crcs, files) = new java.io.File(s"$dir/inv/manifest").listFiles
+      .filter(f => f.isFile && !f.getName.startsWith("_")).partition(_.getName.startsWith("."))
+    val parts = files.filter(_.length > 0)
+    assert(parts.length == 1, parts.mkString(", "))
+    crcs.foreach(_.delete())
+    java.nio.file.Files.writeString(parts.head.toPath, "{\"n_buck")
+    val e = intercept[IllegalArgumentException](
+      graft.ops.Inverted.search(spark, s"$dir/inv", Seq("alpha"), 3))
+    assert(e.getMessage.contains(s"$dir/inv/manifest"), e.getMessage)
+  }
+
   test("date-partitioned parquet prunes partitions at the scan") {
     val dir = tmpDir("graft-layout")
     val events = (0L until 500L)
