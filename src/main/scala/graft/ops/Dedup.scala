@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
 import graft.ops.Materialize.NarrowSyntax
 
 /** Deduplication operators for document corpora, from exact to near-dup.
@@ -570,9 +570,7 @@ object Dedup {
       bands: Int,
       idCol: String,
       textCol: String): (DataFrame, DataFrame) = {
-    require(bands >= 1, s"bands must be >= 1, got $bands")
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val rows = numHashes / bands
+    val rows = bandRows(numHashes, bands)
     // Materialized once — the hashed sets feed the signature pass AND both
     // exact-verify joins (jaccardPairs note; optimization r21).
     val hashed = df.select(
@@ -590,6 +588,15 @@ object Dedup {
         b => slice(col("sig"), b * rows + 1, lit(rows)))))
       .select(col("id"), col("pos").as("band"), col("col").as("bsig"))
     (hashed, banded)
+  }
+
+  /** Signature rows per band, `numHashes / bands`; refuses a split that
+    * does not divide.
+    */
+  private def bandRows(numHashes: Int, bands: Int): Int = {
+    require(bands >= 1, s"bands must be >= 1, got $bands")
+    require(numHashes % bands == 0, "bands must divide numHashes")
+    numHashes / bands
   }
 
   /** Persist a MinHash near-dup INDEX at `path` — [[Similarity.ivfBuild]]'s
@@ -744,23 +751,58 @@ object Dedup {
   /** Incremental NEAR-dup ingest — the re-crawled-but-edited docs
     * [[exactAgainst]]'s fingerprint anti-join cannot see. The incoming
     * batch is signed with the same hash family as the index, its banded
-    * signatures equality-join the persisted signature table, and the
+    * signatures are matched against the persisted signature table, and the
     * candidates are verified with exact Jaccard (hashed shingle sets, the
     * [[minhashLshPairs]] rule) at `threshold`. Output: one row per
-    * verified match `(new_id, ref_id, jaccard)` — anti-join the batch
-    * against `new_id` to admit, or route matches to an update path.
+    * verified match `(new_id, ref_id, jaccard)`, ordered by
+    * `(new_id, ref_id)` — anti-join the batch against `new_id` to admit, or
+    * route matches to an update path.
     *
-    * The signature side is the partition-pruned base scan, unioned with
-    * the append delta when one exists ([[minhashIndexAppend]]); the same
-    * packed `(band, bucket)` filter applies to both — a planning-time
-    * partition filter on the base, a row filter on the delta. A row in
-    * both tables (a compaction that crashed before deleting the delta)
-    * yields the same candidate pair twice, and the candidate `distinct()`
-    * collapses it.
+    * Candidates are the distinct `(new_id, ref_id)` pairs sharing a
+    * `(band, bsig)`. Each gives one row per batch row with that `new_id`
+    * and per `shingles` row with that `ref_id`. The signature side is the
+    * partition-pruned base scan, unioned with the append delta when one
+    * exists ([[minhashIndexAppend]]); the same packed `(band, bucket)`
+    * filter applies to both — a planning-time partition filter on the
+    * base, a row filter on the delta. A row in both tables (a compaction
+    * that crashed before deleting the delta) still yields one pair.
+    *
+    * Size gate, two paths, one answer. When the batch's analyzed-plan size
+    * estimate is at or under `spark.sql.autoBroadcastJoinThreshold` (≥ 0)
+    * and every id column (the batch's, the index tables') is integral, the
+    * probe runs on the driver in three Spark jobs, EAGERLY, inside this
+    * call (as [[connectedComponents]]' driver path does):
+    *  1. the executors sign the batch once and it is collected as
+    *     `(id, hs, bands)`, each band carrying its `bsig`, its bucket and
+    *     the 64-bit key `xxhash64(band, bsig)`; the packed probe keys are
+    *     then computed on the driver;
+    *  1. the signature scan, with the same partition filter plus one
+    *     `InSet` on the band key, collects the matching `(id, band, bsig)`
+    *     rows; `(band, bsig)` equality is checked on the driver, so a
+    *     64-bit key collision never makes a pair;
+    *  1. the candidates' shingle sets are read with the `ref_id` set pushed
+    *     into the `shingles` scan.
+    * The verify expressions then run over a local relation, which the
+    * optimizer folds without a job (so the rounding is Spark's own), and
+    * the result is a local frame with the distributed path's schema,
+    * nullability included. The distributed path costs two checkpoints of
+    * the signed batch, a probe-key collect and the stage jobs of the
+    * candidate and verify joins (10 jobs for a 1,000-document batch).
+    * Driver memory stays bounded: the gate admits the batch collect, and
+    * steps 2 and 3 each keep at most cap + 1 rows, the cap being the
+    * threshold over a per-row size (a signature row's fixed width; for a
+    * shingle row, the batch's largest shingle set). A step that overflows
+    * its cap abandons the driver path and the distributed plan answers.
+    * A batch over the threshold, or with non-integral ids (JVM equality on
+    * other types differs from the join's), takes the distributed plan,
+    * which is lazy. Each call logs one INFO line on logger
+    * `graft.ops.Dedup`: the estimate, the threshold, the path, and on the
+    * driver path the batch rows, matched signature rows, refs fetched and
+    * any fallback with its reason.
     *
     * Scale shape: the batch's distinct `(band, bucket)` keys are a BOUNDED
     * set (≤ bands·nBuckets — routing state, like the IVF probe's centroid
-    * list), collected only to turn the signature read into a planning-time
+    * list), used only to turn the signature read into a planning-time
     * partition-pruned scan; a small batch touches a small fraction of the
     * corpus signature table and never the corpus text. The `numHashes`/
     * `bands`/`n` parameters must match the index build — signatures from a
@@ -781,6 +823,69 @@ object Dedup {
     require(nBuckets >= 1, s"nBuckets must be >= 1, got $nBuckets")
     val spark = incoming.sparkSession
     requireMinhashFamily(spark, path, "nearDupAgainst", n, numHashes, bands, nBuckets)
+    val limit = spark.sessionState.conf.autoBroadcastJoinThreshold
+    val est = incoming.queryExecution.analyzed.stats.sizeInBytes
+    val (onDriver, detail) =
+      if (limit >= 0 && est <= limit)
+        nearDupOnDriver(incoming, path, n, threshold, numHashes, bands, nBuckets,
+          idCol, textCol, limit)
+      else (None, "")
+    log.info(s"nearDupAgainst: batch est $est B, broadcast threshold $limit B -> " +
+      s"${if (onDriver.isDefined) "driver" else "distributed"} path$detail")
+    onDriver.getOrElse(nearDupDistributed(incoming, path, n, threshold, numHashes, bands,
+      nBuckets, idCol, textCol))
+  }
+
+  /** The signature tables of the index at `path`: the partitioned base,
+    * and the append delta when one exists.
+    */
+  private def signatureTables(spark: org.apache.spark.sql.SparkSession, path: String): Seq[DataFrame] = {
+    val (fs, delta) = deltaOf(spark, path)
+    Layout.readParquet(spark, s"$path/signatures") +:
+      (if (fs.exists(delta)) Seq(Layout.readParquet(spark, delta.toString)) else Nil)
+  }
+
+  /** `(id, band, bucket, bsig)` rows of the signature tables that pass
+    * `probed`.
+    */
+  private def signatureRows(tables: Seq[DataFrame], probed: Column): DataFrame =
+    tables.map(_.filter(probed)
+      .select(col("id"), col("band"), col("bucket").cast("long").as("bucket"), col("bsig")))
+      .reduce(_ union _)
+
+  /** One IN over the PACKED key (band·nBuckets + bucket, bijective —
+    * bucket < nBuckets by construction) instead of an OR-chain of
+    * per-(band, bucket) conjunctions: both prune partitions at planning
+    * time (the predicate references only partition columns), but the
+    * OR-chain's plan grows two nodes per probed partition while the IN
+    * stays one InSet node however many partitions a large batch touches.
+    */
+  private def probedPartitions(keys: Seq[(Int, Long)], nBuckets: Int): Column = {
+    val packed = keys.map { case (b, k) => b.toLong * nBuckets + k }.distinct
+    packed.headOption.fold(lit(false)) { _ =>
+      (col("band").cast("long") * lit(nBuckets.toLong) + col("bucket")).isin(packed: _*)
+    }
+  }
+
+  /** The exact-Jaccard verify over `(new_id, ref_id, sh1, sh2)` rows. */
+  private def verified(pairs: DataFrame, threshold: Double): DataFrame =
+    pairs.select(col("new_id"), col("ref_id"),
+      round(size(array_intersect(col("sh1"), col("sh2"))).cast("double") /
+        size(array_union(col("sh1"), col("sh2"))).cast("double"), 4).as("jaccard"))
+      .filter(col("jaccard") >= threshold)
+
+  /** [[nearDupAgainst]]'s distributed plan: candidate and verify joins. */
+  private def nearDupDistributed(
+      incoming: DataFrame,
+      path: String,
+      n: Int,
+      threshold: Double,
+      numHashes: Int,
+      bands: Int,
+      nBuckets: Int,
+      idCol: String,
+      textCol: String): DataFrame = {
+    val spark = incoming.sparkSession
     val (ihashed, ibanded0) = bandedSignatures(incoming, n, numHashes, bands, idCol, textCol)
     // Checkpointed: feeds both the probe-key collect and the candidate
     // join; un-checkpointed it would re-sign the batch once per consumer.
@@ -789,23 +894,7 @@ object Dedup {
       .narrowCheckpoint()
     val probeKeys = ibanded.select(col("band"), col("bucket")).distinct()
       .collect().map(r => (r.getInt(0), r.getLong(1)))
-    // One IN over the PACKED key (band·nBuckets + bucket, bijective —
-    // bucket < nBuckets by construction) instead of an OR-chain of
-    // per-(band, bucket) conjunctions: both prune partitions at planning
-    // time (the predicate references only partition columns), but the
-    // OR-chain's plan grows two nodes per probed partition while the IN
-    // stays one InSet node however many partitions a large batch touches.
-    val packed = probeKeys.map { case (b, k) => b.toLong * nBuckets + k }
-    val probed = packed.headOption.fold(lit(false)) { _ =>
-      (col("band").cast("long") * lit(nBuckets.toLong) + col("bucket"))
-        .isin(packed: _*)
-    }
-    def probe(table: String): DataFrame =
-      Layout.readParquet(spark, table).filter(probed)
-        .select(col("id"), col("band"), col("bucket").cast("long").as("bucket"), col("bsig"))
-    val (fs, delta) = deltaOf(spark, path)
-    val base = probe(s"$path/signatures")
-    val sigs = if (fs.exists(delta)) base.union(probe(delta.toString)) else base
+    val sigs = signatureRows(signatureTables(spark, path), probedPartitions(probeKeys.toSeq, nBuckets))
     val candidates = ibanded.as("a")
       .join(sigs.as("b"),
         col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
@@ -814,14 +903,99 @@ object Dedup {
       .distinct()
     val refShingles = Layout.readParquet(spark, s"$path/shingles")
     Ordered.smallResult(
-      candidates
+      verified(candidates
         .join(ihashed.select(col("id").as("new_id"), col("hs").as("sh1")), "new_id")
-        .join(refShingles.select(col("id").as("ref_id"), col("hs").as("sh2")), "ref_id")
-        .select(col("new_id"), col("ref_id"),
-          round(size(array_intersect(col("sh1"), col("sh2"))).cast("double") /
-            size(array_union(col("sh1"), col("sh2"))).cast("double"), 4).as("jaccard"))
-        .filter(col("jaccard") >= threshold),
+        .join(refShingles.select(col("id").as("ref_id"), col("hs").as("sh2")), "ref_id"),
+        threshold),
       "new_id", "ref_id")
+  }
+
+  /** [[nearDupAgainst]]'s driver path: the answer as a local frame, or
+    * `None` when an id is not integral or a collect overflows its cap;
+    * with the figures for the log line either way.
+    */
+  private def nearDupOnDriver(
+      incoming: DataFrame,
+      path: String,
+      n: Int,
+      threshold: Double,
+      numHashes: Int,
+      bands: Int,
+      nBuckets: Int,
+      idCol: String,
+      textCol: String,
+      limit: Long): (Option[DataFrame], String) = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.graftfns.{Probes, TextFunctions}
+    val spark = incoming.sparkSession
+    val rows = bandRows(numHashes, bands)
+    val tables = signatureTables(spark, path)
+    val shingles = Layout.readParquet(spark, s"$path/shingles")
+    val idFields = incoming.select(col(idCol)).schema ++ tables.map(_.schema("id")) :+
+      shingles.schema("id")
+    def capOf(rowBytes: Long): Int = math.min(limit / rowBytes, Int.MaxValue - 1L).toInt
+    if (!idFields.forall(f => isIntegral(f.dataType))) (None, ", ids not all integral")
+    else {
+      // Each projection references its producer's costly column more than
+      // once, so CollapseProject keeps the three apart and each kernel runs
+      // once per row; merged, the signature would be recomputed inside the
+      // band lambda, once per band.
+      val signed = incoming
+        .select(col(idCol).as("id"), TextFunctions.shingleHashes(col(textCol), n).as("hs"))
+        .select(col("id"), col("hs"),
+          TextFunctions.minhashSignature(col("hs"), numHashes).as("sig"))
+        .select(col("id"), col("hs"), transform(sequence(lit(0), lit(bands - 1)), { b =>
+          val bsig = slice(col("sig"), b * rows + 1, lit(rows))
+          struct(b.as("band"), bsig.as("bsig"),
+            pmod(xxhash64(bsig), lit(nBuckets.toLong)).as("bucket"), xxhash64(b, bsig).as("key"))
+        }).as("bands"))
+      val batch = signed.collect() // job 1, admitted by the gate
+      // A null id or an unshingleable doc matches nothing: the distributed
+      // joins drop the one, its signing filter the other.
+      val docs = batch.filter(r => !r.isNullAt(0) && !r.isNullAt(1) && r.getSeq[Long](1).nonEmpty)
+      val docBands = for (r <- docs; b <- r.getSeq[Row](2))
+        yield (b.getInt(0), b.getSeq[Long](1), b.getLong(2), b.getLong(3), asLong(r.get(0)))
+      val byBand = docBands.groupMap(t => (t._1, t._2))(_._5)
+      val sigScan = signatureRows(tables,
+        probedPartitions(docBands.map(t => (t._1, t._3)).toSeq, nBuckets) &&
+          Probes.inSet(xxhash64(col("band").cast("int"), col("bsig")), docBands.map(_._4)))
+        .select(col("id"), col("band").cast("int").as("band"), col("bsig"))
+      val sigCap = capOf(12L + 8L * rows)
+      val stats = s", batch rows ${batch.length}"
+      (if (docBands.isEmpty) Some(Array.empty[Row]) else Probes.collectAtMost(sigScan, sigCap)) match {
+        case None => (None, s"$stats, signature rows over the cap of $sigCap: fallback")
+        case Some(sigRows) =>
+          val refOut = sigRows.filterNot(_.isNullAt(0)).map(r => asLong(r.get(0)) -> r.get(0)).toMap
+          val pairs = sigRows.filter(r => !r.isNullAt(0) && !r.isNullAt(1)).flatMap { r =>
+            byBand.getOrElse((r.getInt(1), r.getSeq[Long](2)), Array.empty[Long])
+              .map(_ -> asLong(r.get(0)))
+          }.distinct
+          val refs = pairs.map(_._2).distinct
+          val toShId = fromLong(shingles.schema("id").dataType)
+          val shCap = capOf(8L + 8L * docs.map(_.getSeq[Long](1).size).maxOption.getOrElse(0))
+          val sigStats = s"$stats, signature rows ${sigRows.length}"
+          (if (refs.isEmpty) Some(Array.empty[Row])
+           else Probes.collectAtMost(shingles.filter(Probes.inSet(col("id"), refs.map(toShId)))
+             .select(col("id"), col("hs")), shCap)) match {
+            case None => (None, s"$sigStats, shingle rows over the cap of $shCap: fallback")
+            case Some(refRows) =>
+              val docsOf = docs.groupBy(r => asLong(r.get(0)))
+              val shinglesOf = refRows.groupBy(r => asLong(r.get(0)))
+              val joined = for ((nk, rk) <- pairs.sorted; d <- docsOf(nk);
+                  s <- shinglesOf.getOrElse(rk, Array.empty[Row]))
+                yield Row(d.get(0), refOut(rk), d.get(1), s.get(1))
+              val schema = org.apache.spark.sql.types.StructType(Seq(
+                signed.schema("id").copy(name = "new_id"), sigScan.schema("id").copy(name = "ref_id"),
+                signed.schema("hs").copy(name = "sh1"), shingles.schema("hs").copy(name = "sh2")))
+              // A project and filter over a local relation, folded in row
+              // order with no job. Collected once, so the returned frame
+              // holds the verified rows, not the candidates' shingle sets.
+              val out = verified(spark.createDataFrame(joined.toSeq.asJava, schema), threshold)
+              (Some(spark.createDataFrame(out.collect().toSeq.asJava, out.schema)),
+                s"$sigStats, refs fetched ${refs.length}")
+          }
+      }
+    }
   }
 
   /** Embedding-cosine near-dup: assign every vector a representative — the
@@ -947,10 +1121,7 @@ object Dedup {
     val vEst = vertices.queryExecution.analyzed.stats.sizeInBytes
     val eEst = edges.queryExecution.analyzed.stats.sizeInBytes
     val integral = Seq(vertices.select(col(idCol)), edges.select(col(srcCol), col(dstCol)))
-      .flatMap(_.schema.map(_.dataType)).forall {
-        case ByteType | ShortType | IntegerType | LongType => true
-        case _ => false
-      }
+      .flatMap(_.schema.map(_.dataType)).forall(isIntegral)
     val onDriver = threshold >= 0 && vEst <= threshold && eEst <= threshold &&
       checkpointDir.isEmpty && integral
     val (labels, rounds, done) =
@@ -972,6 +1143,22 @@ object Dedup {
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger("graft.ops.Dedup")
 
+  /** The id types the driver paths compare as `Long`: the widening Spark's
+    * joins apply to them, so JVM equality and ordering agree with Spark's.
+    */
+  private def isIntegral(t: DataType): Boolean = t match {
+    case ByteType | ShortType | IntegerType | LongType => true
+    case _ => false
+  }
+  private def asLong(x: Any): Long = x.asInstanceOf[Number].longValue
+  /** A `Long` back in integral type `t`. */
+  private def fromLong(t: DataType): Long => Any = t match {
+    case ByteType => _.toByte
+    case ShortType => _.toShort
+    case IntegerType => _.toInt
+    case _ => identity
+  }
+
   /** [[connectedComponents]]' rounds in driver memory, for inputs its size
     * gate admits (integral ids, broadcast-sized). Ids compare as `Long`,
     * the widening the distributed join applies to integral types, and every
@@ -991,17 +1178,17 @@ object Dedup {
     // `least` is nullable iff its operands are, as in the round's select.
     val v = vertices.select(col(idCol).as("id"))
     val schema = v.select(col("id"), least(col("id"), col("id")).as("rep")).schema
-    def asLong(x: Any): Option[Long] = Option(x).map(_.asInstanceOf[Number].longValue)
+    def asLongOpt(x: Any): Option[Long] = Option(x).map(asLong)
     val ids = v.collect().map(_.get(0))
     val index = scala.collection.mutable.HashMap.empty[Long, Int]
-    ids.flatMap(asLong).foreach(id => if (!index.contains(id)) index(id) = index.size)
+    ids.flatMap(asLongOpt).foreach(id => if (!index.contains(id)) index(id) = index.size)
     val rep = new Array[Long](index.size)
     index.foreach { case (id, i) => rep(i) = id }
     // Undirected adjacency between vertices only: an endpoint that is null
     // or not a vertex matches no label row in the join, so it adds nothing.
     val adj = Array.fill(index.size)(List.empty[Int])
     edges.select(col(srcCol), col(dstCol)).collect().foreach { r =>
-      for (s <- asLong(r.get(0)).flatMap(index.get); d <- asLong(r.get(1)).flatMap(index.get)) {
+      for (s <- asLongOpt(r.get(0)).flatMap(index.get); d <- asLongOpt(r.get(1)).flatMap(index.get)) {
         adj(s) = d :: adj(s)
         adj(d) = s :: adj(d)
       }
@@ -1018,13 +1205,8 @@ object Dedup {
       done = !changed
       rounds += 1
     }
-    val fromLong: Long => Any = schema("rep").dataType match {
-      case ByteType => _.toByte
-      case ShortType => _.toShort
-      case IntegerType => _.toInt
-      case _ => identity
-    }
-    val rows = ids.map(id => Row(id, asLong(id).map(l => fromLong(rep(index(l)))).orNull))
+    val repOf = fromLong(schema("rep").dataType)
+    val rows = ids.map(id => Row(id, asLongOpt(id).map(l => repOf(rep(index(l)))).orNull))
     (vertices.sparkSession.createDataFrame(rows.toSeq.asJava, schema), rounds, done)
   }
 

@@ -77,13 +77,25 @@ object Inverted {
       .parquet(s"$path/postings")
   }
 
+  /** The buckets `terms` hash to, by the same `pmod(xxhash64(term))`
+    * projection as the postings writer. The projection runs over a local
+    * relation, which the optimizer folds into one, so no Spark job starts.
+    */
+  private def bucketsOf(spark: SparkSession, terms: Seq[String], nBuckets: Int): Seq[Int] = {
+    import spark.implicits._
+    terms.toDF("term")
+      .select(pmod(xxhash64(col("term")), lit(nBuckets.toLong)).cast("int"))
+      .collect().map(_.getInt(0)).distinct.toSeq
+  }
+
   /** Conjunctive (AND-of-terms) search: docs containing EVERY query term,
     * ranked by summed term frequency (ties broken by doc id). Reads ONLY
     * the bucket partitions the query terms hash to: the term→bucket
-    * routing is computed by a |terms|-row local job (bounded driver-side
-    * routing state, the [[Similarity]] centroid-collect pattern), then
-    * pushed as a partition filter, so planning prunes every other bucket
-    * directory before any posting file opens.
+    * routing is computed on the driver without a job ([[bucketsOf]]),
+    * then pushed as a partition filter, so planning prunes every other
+    * bucket directory before any posting file opens. The postings open
+    * from their footer schema ([[Layout.readParquet]]), so planning a
+    * search starts no Spark job.
     */
   def search(
       spark: SparkSession,
@@ -93,11 +105,8 @@ object Inverted {
     require(terms.nonEmpty, "search needs at least one term")
     val qs = terms.distinct
     val nBuckets = readManifest(spark, path)
-    import spark.implicits._
-    val buckets = qs.toDF("term")
-      .select(pmod(xxhash64(col("term")), lit(nBuckets.toLong)).cast("int"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    spark.read.parquet(s"$path/postings")
+    val buckets = bucketsOf(spark, qs, nBuckets)
+    Layout.readParquet(spark, s"$path/postings")
       .filter(col("bucket").isin(buckets: _*) && col("term").isin(qs: _*))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_terms"), sum(col("tf")).as("tf_sum"))
@@ -117,11 +126,8 @@ object Inverted {
     require(terms.nonEmpty, "termStats needs at least one term")
     val qs = terms.distinct
     val nBuckets = readManifest(spark, path)
-    import spark.implicits._
-    val buckets = qs.toDF("term")
-      .select(pmod(xxhash64(col("term")), lit(nBuckets.toLong)).cast("int"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    spark.read.parquet(s"$path/postings")
+    val buckets = bucketsOf(spark, qs, nBuckets)
+    Layout.readParquet(spark, s"$path/postings")
       .filter(col("bucket").isin(buckets: _*) && col("term").isin(qs: _*))
       .groupBy(col("term"))
       .agg(count(lit(1)).as("df"), sum(col("tf")).as("tf_total"))

@@ -108,7 +108,13 @@ object Layout {
     * exactly as before.
     */
   private[graft] def readParquet(
-      spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
+      spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
+    parquetRelation(spark, path).fold(spark.read.parquet(path))(spark.baseRelationToDataFrame)
+
+  /** [[readParquet]]'s relation; `None` for a missing or empty path. */
+  private def parquetRelation(
+      spark: org.apache.spark.sql.SparkSession, path: String)
+      : Option[org.apache.spark.sql.execution.datasources.HadoopFsRelation] = {
     import org.apache.hadoop.fs.Path
     import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
     import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
@@ -119,38 +125,74 @@ object Layout {
     val conf = spark.sessionState.newHadoopConf()
     val root = new Path(path)
     val fs = root.getFileSystem(conf)
-    val relation =
-      if (!fs.exists(root)) None
-      else {
-        // The listing the reader itself does (hidden-file and partition rules).
-        val index = new InMemoryFileIndex(spark, Seq(fs.makeQualified(root)), Map.empty, None)
-        val leaves = index.allFiles().sortBy(_.getPath.toString)
-        val summaries = Seq(
-          ParquetFileWriter.PARQUET_COMMON_METADATA_FILE, ParquetFileWriter.PARQUET_METADATA_FILE)
-        summaries.flatMap(n => leaves.find(_.getPath.getName == n)).headOption
-          .orElse(leaves.find(f => !summaries.contains(f.getPath.getName)))
-          .map { f =>
-            val footer = ParquetFooterReader.readFooter(
-              HadoopInputFile.fromStatus(f, conf), SKIP_ROW_GROUPS)
-            val schema = ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
-              new ParquetToSparkSchemaConverter(spark.sessionState.conf))
-            val resolver = spark.sessionState.conf.resolver
-            val parts = index.partitionSchema
-            // Spark's private `asNullable`, which the reader applies to
-            // a given data schema.
-            def nullable(t: DataType): DataType = t match {
-              case s: StructType => StructType(s.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
-              case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
-              case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
-              case other => other
-            }
-            HadoopFsRelation(index, parts,
-              nullable(StructType(schema.filterNot(c => parts.exists(p => resolver(p.name, c.name)))))
-                .asInstanceOf[StructType],
-              None, new ParquetFileFormat, Map.empty)(spark)
+    if (!fs.exists(root)) None
+    else {
+      // The listing the reader itself does (hidden-file and partition rules).
+      val index = new InMemoryFileIndex(spark, Seq(fs.makeQualified(root)), Map.empty, None)
+      val leaves = index.allFiles().sortBy(_.getPath.toString)
+      val summaries = Seq(
+        ParquetFileWriter.PARQUET_COMMON_METADATA_FILE, ParquetFileWriter.PARQUET_METADATA_FILE)
+      summaries.flatMap(n => leaves.find(_.getPath.getName == n)).headOption
+        .orElse(leaves.find(f => !summaries.contains(f.getPath.getName)))
+        .map { f =>
+          val footer = ParquetFooterReader.readFooter(
+            HadoopInputFile.fromStatus(f, conf), SKIP_ROW_GROUPS)
+          val schema = ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
+            new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+          val resolver = spark.sessionState.conf.resolver
+          val parts = index.partitionSchema
+          // Spark's private `asNullable`, which the reader applies to
+          // a given data schema.
+          def nullable(t: DataType): DataType = t match {
+            case s: StructType => StructType(s.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+            case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+            case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+            case other => other
           }
-      }
-    relation.fold(spark.read.parquet(path))(spark.baseRelationToDataFrame)
+          HadoopFsRelation(index, parts,
+            nullable(StructType(schema.filterNot(c => parts.exists(p => resolver(p.name, c.name)))))
+              .asInstanceOf[StructType],
+            None, new ParquetFileFormat, Map.empty)(spark)
+        }
+    }
+  }
+
+  /** Every row of a small parquet table, decoded on the driver with no
+    * Spark job: [[readParquet]]'s relation (same listing, same schema, so
+    * each column keeps the table's own type) read file by file through
+    * Spark's own parquet reader, partition values appended. For routing
+    * state a probe reads whole on every call, such as an IVF centroid
+    * table, where a collect would start a job per probe. The footers' row
+    * counts are summed first, and a table holding more than `maxRows` rows
+    * is refused with its path before any row is decoded.
+    */
+  private[graft] def collectParquet(
+      spark: org.apache.spark.sql.SparkSession, path: String, maxRows: Long): Array[org.apache.spark.sql.Row] = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.paths.SparkPath
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader}
+    val rel = parquetRelation(spark, path).getOrElse(
+      throw new IllegalArgumentException(s"parquet table $path does not exist or holds no files"))
+    val conf = spark.sessionState.newHadoopConf()
+    val files = rel.location.listFiles(Nil, Nil).flatMap(d => d.files.map(f => (d.values, f.fileStatus)))
+    val rows = files.map { case (_, f) =>
+      ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, conf), NO_FILTER)
+        .getBlocks.asScala.map(_.getRowCount).sum
+    }.sum
+    require(rows <= maxRows,
+      s"parquet table $path holds $rows rows, more than the $maxRows a driver-side read takes")
+    val read = new ParquetFileFormat().buildReaderWithPartitionValues(spark, rel.dataSchema,
+      rel.partitionSchema, rel.dataSchema, Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), conf)
+    val toRow = CatalystTypeConverters.createToScalaConverter(rel.schema)
+    files.toArray.flatMap { case (values, f) =>
+      read(PartitionedFile(values, SparkPath.fromPath(f.getPath), 0L, f.getLen,
+        Array.empty[String], f.getModificationTime, f.getLen, Map.empty))
+        .map(r => toRow(r).asInstanceOf[org.apache.spark.sql.Row])
+    }
   }
 
   /** The named integer fields of a one-line JSON index manifest: the
@@ -577,14 +619,19 @@ object Layout {
         "re-run statsManifest, or verifyManifest to audit")
   }
 
+  /** The surviving files of a pruned read, with the table's footer schema
+    * ([[readParquet]], read on the driver) instead of an inference job.
+    */
   private def readFileList(
       spark: org.apache.spark.sql.SparkSession,
-      tablePath: String, keep: Seq[String]): DataFrame =
-    if (keep.isEmpty) spark.read.parquet(tablePath).filter(lit(false))
+      tablePath: String, keep: Seq[String]): DataFrame = {
+    val table = readParquet(spark, tablePath)
+    if (keep.isEmpty) table.filter(lit(false))
     // basePath anchors partition discovery at the table root, so a
     // file-list read of a Hive-partitioned table keeps its partition
     // columns (a bare file read would silently drop them).
-    else spark.read.option("basePath", tablePath).parquet(keep: _*)
+    else spark.read.schema(table.schema).option("basePath", tablePath).parquet(keep: _*)
+  }
 
   /** EQUALITY point lookup through the manifest's Bloom bitmaps
     * ([[statsManifest]]'s `bloomCols`): reads only the files whose bitmap

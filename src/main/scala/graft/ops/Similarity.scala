@@ -1464,7 +1464,7 @@ object Similarity {
   /** Probe a persisted IVF index: top-k by cosine against the literal
     * `query` vector, scanning ONLY the `nprobe` nearest cluster partitions.
     *
-    * The centroid table is collected to the driver to pick the probe list —
+    * The centroid table is decoded on the driver to pick the probe list —
     * deliberate and tiny (k rows; every ANN service holds its routing table
     * in RAM), and it is exactly what turns the cluster predicate into a
     * LITERAL `IN` the scan prunes partitions with at planning time
@@ -1502,6 +1502,10 @@ object Similarity {
     * centroid table — deliberate and tiny (every ANN service holds its
     * routing table in RAM), and exactly what turns the cluster predicate
     * into a LITERAL `IN` the scan prunes partitions with at planning time.
+    * The table is decoded on the driver ([[Layout.collectParquet]]), so
+    * planning a probe starts no Spark job; `cl` keeps the table's own type
+    * (Int labels, Long k-means seeds), and a table of more than
+    * [[MaxCentroids]] rows is refused with its path.
     * The scoring replays the in-plan [[cosine]] fold (same left-to-right
     * double accumulation), so probe selection matches the in-plan paths
     * bit-for-bit; cs desc, cl asc — the same probe-list order as
@@ -1513,8 +1517,7 @@ object Similarity {
       query: Array[Double],
       nprobe: Int): Seq[Any] = {
     val qn = math.sqrt(blasDot(query, query))
-    Layout.readParquet(spark, s"$path/centroids")
-      .collect()
+    Layout.collectParquet(spark, s"$path/centroids", MaxCentroids)
       .map { r =>
         val cv = r.getSeq[Double](r.fieldIndex("cvec")).toArray
         val cs = blasDot(cv, query) / (math.sqrt(blasDot(cv, cv)) * qn)
@@ -1527,6 +1530,11 @@ object Similarity {
       .map(_._1)
       .toSeq
   }
+
+  /** The most centroid rows a probe decodes on the driver: 65,536
+    * centroids of 128 doubles are 64 MiB of routing state.
+    */
+  private val MaxCentroids = 1L << 16
 
   // -------------------------------------------------- SRP (hyperplane) LSH
 

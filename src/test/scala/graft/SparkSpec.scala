@@ -59,6 +59,29 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       (a, jobs.get())
     } finally sc.removeSparkListener(l)
   }
+
+  /** `body`'s result and the query executions it ran to completion, in
+    * order: their executed plans keep the scans' filters and metrics.
+    */
+  def queriesOf[A](body: => A): (A, Seq[org.apache.spark.sql.execution.QueryExecution]) = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val sc = spark.sparkContext
+    val qes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val l = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        qes.add(qe); ()
+      }
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    org.apache.spark.GraftTestBus.waitUntilEmpty(sc)
+    spark.listenerManager.register(l)
+    try {
+      val a = body
+      org.apache.spark.GraftTestBus.waitUntilEmpty(sc)
+      (a, scala.jdk.CollectionConverters.IteratorHasAsScala(qes.iterator).asScala.toSeq)
+    } finally spark.listenerManager.unregister(l)
+  }
 }
 
 object SparkSpec {

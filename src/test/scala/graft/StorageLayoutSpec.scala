@@ -66,9 +66,9 @@ class StorageLayoutSpec extends SparkSpec {
     val q = rows.head._2.map(_.toDouble).toArray
     val (probe, probeJobs) = jobsOf(graft.ops.Similarity.ivfProbePersisted(
       spark, s"$dir/idx", q, k = 5, nprobe = 2, excludeId = Some(0L)))
-    // Planning the probe collects the centroid table (one job); the
-    // centroid and vector tables open from their footers without a job.
-    assert(probeJobs == 1, s"probe planning started $probeJobs job(s)")
+    // Planning the probe starts no job: the centroid table is decoded on
+    // the driver, and the vector table opens from its footer.
+    assert(probeJobs == 0, s"probe planning started $probeJobs job(s)")
     val got = probe.collect()
 
     // 1. Results equal the in-plan ivfTopK over the same corpus: same
@@ -98,22 +98,42 @@ class StorageLayoutSpec extends SparkSpec {
       scans.head.metrics.map { case (k, m) => s"$k=${m.value}" }.mkString(", "))
   }
 
-  test("minhash index probe prunes to the batch's (band, bucket) partitions") {
-    val dir = tmpDir("graft-layout")
-    // 40 distinct docs; doc 7 gets a near-identical twin (id 100) planted
-    // in the incoming batch, alongside a fresh doc (id 101) matching
-    // nothing.
+  /** AQE wraps materialized stages in QueryStageExec leaves, so a scan
+    * hunt must descend into them explicitly.
+    */
+  private def deepScans(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.FileSourceScanExec] = p match {
+    case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+      deepScans(a.executedPlan)
+    case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
+      deepScans(q.plan)
+    case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec =>
+      deepScans(r.child)
+    case f: org.apache.spark.sql.execution.FileSourceScanExec => Seq(f)
+    case other => other.children.flatMap(deepScans)
+  }
+
+  // 40 distinct docs; doc 7 gets a near-identical twin (id 100) planted in
+  // the incoming batch, alongside a fresh doc (id 101) matching nothing.
+  private def minhashProbeFixture(dir: String) = {
     val mk = (i: Long) =>
       s"alpha bravo charlie delta echo foxtrot golf hotel doc$i marker$i tail$i"
     val corpus = (0L until 40L).map(i => (i, mk(i))).toDF("doc_id", "text")
     graft.ops.Dedup.minhashIndexBuild(corpus, s"$dir/idx", n = 3)
-    val incoming = Seq(
+    Seq(
       (100L, mk(7L) + " recrawl"),
       (101L, "completely different words nothing shared here at all today")
     ).toDF("doc_id", "text")
-    val matches = graft.ops.Dedup.nearDupAgainst(
-      incoming, s"$dir/idx", n = 3, threshold = 0.6)
-    val got = matches.collect().map(r => (r.getLong(0), r.getLong(1)))
+  }
+
+  test("minhash index probe prunes to the batch's (band, bucket) partitions") {
+    val dir = tmpDir("graft-layout")
+    val incoming = minhashProbeFixture(dir)
+    // The distributed plan, whose returned frame holds the signature scan.
+    val (matches, got) = withSqlConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val m = graft.ops.Dedup.nearDupAgainst(incoming, s"$dir/idx", n = 3, threshold = 0.6)
+      (m, m.collect().map(r => (r.getLong(0), r.getLong(1))))
+    }
     // The edited re-crawl matches its original; the fresh doc matches
     // nothing (shared stopword-prefix shingles stay below threshold).
     assert(got.contains((100L, 7L)), got.mkString(", "))
@@ -122,22 +142,29 @@ class StorageLayoutSpec extends SparkSpec {
     // The signature read is partition-pruned at planning: the scan carries
     // band/bucket partition filters and reads only partitions the 2-doc
     // batch's signatures hash to — strictly fewer than the index holds.
-    // AQE wraps materialized stages in QueryStageExec leaves, so the scan
-    // hunt must descend into them explicitly.
-    def deepScans(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.FileSourceScanExec] = p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        deepScans(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        deepScans(q.plan)
-      case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec =>
-        deepScans(r.child)
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => Seq(f)
-      case other => other.children.flatMap(deepScans)
-    }
     val scans = deepScans(matches.queryExecution.executedPlan)
       .filter(_.metadata("Location").contains("signatures"))
     assert(scans.nonEmpty, matches.queryExecution.executedPlan.toString.take(2000))
+    val meta = scans.head.metadata("PartitionFilters")
+    assert(meta.contains("band") && meta.contains("bucket"), meta)
+    val allParts = spark.read.parquet(s"$dir/idx/signatures")
+      .select("band", "bucket").distinct().count()
+    val readParts = scans.head.metrics("numPartitions").value
+    assert(readParts > 0 && readParts < allParts,
+      s"read $readParts of $allParts partitions")
+  }
+
+  test("minhash index probe on the driver path prunes its signature scan the same way") {
+    val dir = tmpDir("graft-layout")
+    val incoming = minhashProbeFixture(dir)
+    val (got, qes) = queriesOf(graft.ops.Dedup.nearDupAgainst(
+      incoming, s"$dir/idx", n = 3, threshold = 0.6).collect().map(r => (r.getLong(0), r.getLong(1))))
+    assert(got.contains((100L, 7L)) && got.forall(_._1 == 100L), got.mkString(", "))
+    // The returned frame is local; the pruned scan is the signature probe
+    // the call ran to build it.
+    val scans = qes.flatMap(q => deepScans(q.executedPlan))
+      .filter(_.metadata("Location").contains("signatures"))
+    assert(scans.size == 1, qes.map(_.executedPlan.toString.take(1000)).mkString("\n\n"))
     val meta = scans.head.metadata("PartitionFilters")
     assert(meta.contains("band") && meta.contains("bucket"), meta)
     val allParts = spark.read.parquet(s"$dir/idx/signatures")
@@ -325,10 +352,10 @@ class StorageLayoutSpec extends SparkSpec {
     assert(manifest.inputFiles.nonEmpty &&
       manifest.inputFiles.toSet == spark.read.parquet(m).inputFiles.toSet)
     assert(manifest.count() == 5L)
-    // Planning a pruned read: the surviving-file collect and the file-list
-    // read's schema inference, nothing for the manifest.
+    // Planning a pruned read: the surviving-file collect, nothing for the
+    // manifest, and no schema inference for the file-list read.
     val (pruned, planJobs) = jobsOf(graft.ops.Layout.prunedParquet(spark, s"$dir/t", "t", 500L, 700L))
-    assert(planJobs == 2, s"pruned read planning started $planJobs job(s)")
+    assert(planJobs == 1, s"pruned read planning started $planJobs job(s)")
     val expected = rows.filter(col("t") >= 500L && col("t") <= 700L).collect().map(_.toString).sorted
     assert(pruned.collect().map(_.toString).sorted.toSeq == expected.toSeq && expected.nonEmpty)
     graft.ops.Layout.verifyManifest(spark, s"$dir/t")
@@ -657,10 +684,10 @@ class StorageLayoutSpec extends SparkSpec {
       graft.ops.Layout.readJsonManifest(spark, s"$dir/inv/manifest", "n_buckets"))
     assert(inv == Map("n_buckets" -> 4))
     assert(invJobs == 0, s"inverted manifest read started $invJobs job(s)")
-    // The one job left in planning a search is the term-routing collect;
-    // the manifest adds none.
+    // Planning a search starts no job: neither the manifest nor the
+    // term routing needs one.
     val (_, searchJobs) = jobsOf(graft.ops.Inverted.search(spark, s"$dir/inv", Seq("alpha"), 3))
-    assert(searchJobs == 1, s"planning an inverted search started $searchJobs job(s)")
+    assert(searchJobs == 0, s"planning an inverted search started $searchJobs job(s)")
     graft.ops.Similarity.knnGraphBuild(
       (0L until 12L).map(id => (id, Array(1.0f, (id % 3).toFloat))).toDF("vec_id", "embedding"),
       s"$dir/knn", nClusters = Some(2), rounds = 1, kNeighbors = 2)
